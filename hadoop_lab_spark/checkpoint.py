@@ -50,15 +50,16 @@ def partitioning_preserved(spark):
     are too big to broadcast, that is the difference between shuffling
     10⁹ edges per round and shuffling only rank-sized rows.
 
-    NOT applied to the graph operators yet — measured both ways (r11,
-    PERFORMANCE.md "r11: checkpoint partitioning"): at bench SF the
-    scope costs 2-4x wall on the PageRank lanes (the AQE-off build
-    loses partition coalescing, so tiny checkpoints carry
-    shuffle-partition-count partitions into every round, and the
-    rounds lose AQE's runtime broadcast conversion), while AQE's
-    runtime broadcast already keeps the edge table in place at that
-    scale. Apply it when the static side is genuinely large (the
-    forced-SMJ regime) — the r12 candidate is a size-aware switch.
+    Applied to the graph operators only through the size-aware switch
+    :func:`tracked_checkpoint_partitioned` (static tables of
+    ``PARTITION_PRESERVE_MIN_BYTES`` or more). Unconditionally it
+    loses — measured both ways (r11, PERFORMANCE.md "r11: checkpoint
+    partitioning"): at bench SF the scope costs 2-4x wall on the
+    PageRank lanes (the AQE-off build loses partition coalescing, so
+    tiny checkpoints carry shuffle-partition-count partitions into
+    every round, and the rounds lose AQE's runtime broadcast
+    conversion), while AQE's runtime broadcast already keeps the edge
+    table in place at that scale.
 
     Usage: build the DataFrame AND call :func:`tracked_checkpoint`
     inside the scope — Datasets compile their physical plan lazily at

@@ -245,8 +245,8 @@ def minhash_near_dups(
     computed once. Regime note (ADVICE r12): the replaced-exchange
     claim holds only in the SMJ/SHJ regime, where (band, band_sig) is
     the join's required distribution; at broadcast scale (bench SFs —
-    see plans/r13/dedup_minhash_lsh_final.txt for the executed-plan
-    evidence) the initial plan carries the two pinned Exchanges as
+    see the initial adaptive plan in plans/r12/dedup_minhash_lsh_after.txt)
+    the initial plan carries the two pinned Exchanges as
     ADDITIONS under the BroadcastHashJoin, and the single signature
     pass comes from AQE's runtime stage reuse of the now-identical
     exchange subtrees. Measured

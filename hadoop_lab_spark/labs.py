@@ -32,11 +32,11 @@ from hadoop_lab_spark.operators import (
 from hadoop_lab_spark.sources.reference_text import (
     arity_at_least,
     field,
-    naive_split,
     non_blank,
     read_lines,
     skip_header_first_token,
     skip_header_prefix,
+    split_lines,
     try_int,
 )
 
@@ -53,10 +53,8 @@ def lab3_highest_temperature(spark: SparkSession, path: str) -> DataFrame:
     No BOM/header special-case: the BOM'd header row survives the arity
     guard and dies on the int cast, exactly like the Java parse failure
     (`lab3:88-92`)."""
-    parts = naive_split(F.trim(F.col("value")), r"\s+")
     rows = (
-        read_lines(spark, path)
-        .select(parts.alias("p"))
+        split_lines(spark, path, r"\s+", trim=True)
         .filter(F.size("p") == 2)
         .select(field(F.col("p"), 0).alias("year"), try_int(field(F.col("p"), 1)).alias("temp"))
         .filter(F.col("temp").isNotNull())
@@ -67,10 +65,8 @@ def lab3_highest_temperature(spark: SparkSession, path: str) -> DataFrame:
 def lab4_student_grades(spark: SparkSession, path: str) -> DataFrame:
     """lab4/StudentGrades.sh:61-140 — marks→letter grade, collect
     'subject:grade' per student (elements sorted — §2.10.8)."""
-    parts = naive_split(F.col("value"), ",")
     rows = (
-        read_lines(spark, path)
-        .select(parts.alias("p"))
+        split_lines(spark, path, ",")
         .filter(F.size("p") == 3)
         .select(
             field(F.col("p"), 0).alias("student"),
@@ -88,10 +84,8 @@ def lab5_matrix_multiply(spark: SparkSession, path: str) -> DataFrame:
     `tag,row,col,value` with tag∈{A,B}. Dimensions derive from the data
     (the reference hardcodes K=2 — `lab5:86,106`); the composite output
     key `"i,j"` is rendered at the sink, kept as real columns here."""
-    parts = naive_split(F.col("value"), ",")
     cells = (
-        read_lines(spark, path)
-        .select(parts.alias("p"))
+        split_lines(spark, path, ",")
         .filter(arity_at_least(F.col("p"), 4))
         .select(
             field(F.col("p"), 0).alias("tag"),
@@ -121,14 +115,12 @@ def lab6_max_electricity(spark: SparkSession, path: str) -> DataFrame:
     month loop (`lab6:88-99`), so a row with ANY unparseable month is
     dropped entirely — hence the `forall isNotNull` guard, not a
     null-ignoring max."""
-    parts = naive_split(F.trim(F.col("value")), r"\s+")
     months = F.transform(
         F.slice(F.col("p"), 2, F.size("p") - 2),
         lambda c: F.trim(c).try_cast("int"),
     )
     rows = (
-        read_lines(spark, path)
-        .select(parts.alias("p"))
+        split_lines(spark, path, r"\s+", trim=True)
         .filter(arity_at_least(F.col("p"), 3))
         .filter(skip_header_first_token(F.col("p"), "year"))
         .select(field(F.col("p"), 0).alias("year"), months.alias("m"))
@@ -141,11 +133,8 @@ def lab6_max_electricity(spark: SparkSession, path: str) -> DataFrame:
 def lab7_weather(spark: SparkSession, path: str) -> DataFrame:
     """lab7/WeatherAnalyzer.sh:61-127 — classify each day Shiny/Cool by
     max temp (>= 30 → Shiny, boundary inclusive — §2.10.3)."""
-    parts = naive_split(F.trim(F.col("value")), r"\s+")
     rows = (
-        read_lines(spark, path)
-        .filter(non_blank(F.col("value")))
-        .select(parts.alias("p"))
+        split_lines(spark, path, r"\s+", trim=True, keep=non_blank(F.col("value")))
         .filter(arity_at_least(F.col("p"), 2))
         .filter(skip_header_first_token(F.col("p"), "date"))
         .select(
@@ -161,11 +150,8 @@ def lab8_product_sales(spark: SparkSession, path: str) -> DataFrame:
     """lab8/ProductSalesAnalyzer.sh:61-128 — transaction count per
     country (field 9 of 13; counts ROWS, not distinct products —
     §2.10.5)."""
-    parts = naive_split(F.col("value"), ",")
     rows = (
-        read_lines(spark, path)
-        .filter(skip_header_prefix(F.col("value"), "Transaction"))
-        .select(parts.alias("p"))
+        split_lines(spark, path, ",", keep=skip_header_prefix(F.col("value"), "Transaction"))
         .filter(arity_at_least(F.col("p"), 9))
         .select(field(F.col("p"), 8).alias("country"))
     )
@@ -175,10 +161,8 @@ def lab8_product_sales(spark: SparkSession, path: str) -> DataFrame:
 def lab9_movie_tags(spark: SparkSession, path: str) -> DataFrame:
     """lab9/MovieTagsAnalyzer.sh:61-114 — concatenate tags per movie
     (`::`-delimited input; elements sorted — §2.10.8)."""
-    parts = naive_split(F.col("value"), "::")
     rows = (
-        read_lines(spark, path)
-        .select(parts.alias("p"))
+        split_lines(spark, path, "::")
         .filter(arity_at_least(F.col("p"), 3))
         .select(field(F.col("p"), 1).alias("movie_id"), field(F.col("p"), 2).alias("tag"))
     )
@@ -193,11 +177,8 @@ def lab10_book_publications(spark: SparkSession, path: str) -> DataFrame:
     later field is harmless because YEAR_INDEX=3 precedes the overflow —
     §1.4.2, a real CSV parser would differ) and the year stays a STRING
     (§2.10.6)."""
-    parts = naive_split(F.col("value"), ",")
     rows = (
-        read_lines(spark, path)
-        .filter(skip_header_prefix(F.col("value"), "ISBN"))
-        .select(parts.alias("p"))
+        split_lines(spark, path, ",", keep=skip_header_prefix(F.col("value"), "ISBN"))
         .filter(arity_at_least(F.col("p"), 4))
         .select(field(F.col("p"), 3).alias("year"))
     )
@@ -208,11 +189,10 @@ def lab11_uber_trips(spark: SparkSession, path: str) -> DataFrame:
     """lab11/UberTripAnalyzer.sh:61-137 — per date, the dispatching base
     with the most trips (strictly-greater running max in the reference;
     deterministic smallest-base tie-break here — §2.10.7)."""
-    parts = naive_split(F.col("value"), ",")
     rows = (
-        read_lines(spark, path)
-        .filter(skip_header_prefix(F.col("value"), "dispatching_base_number"))
-        .select(parts.alias("p"))
+        split_lines(
+            spark, path, ",", keep=skip_header_prefix(F.col("value"), "dispatching_base_number")
+        )
         .filter(arity_at_least(F.col("p"), 4))
         .select(
             field(F.col("p"), 0).alias("base"),

@@ -590,7 +590,7 @@ def q_q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH offers AS (
             SELECT l_partkey, l_suppkey,
-                   min(l_extendedprice / l_quantity) AS offer
+                   min(l_extendedprice / nullif(l_quantity, 0)) AS offer
             FROM lineitem GROUP BY l_partkey, l_suppkey
         ),
         eu AS (
@@ -628,14 +628,17 @@ def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-back VERDICT r4 #4 names. The min rides the RAW division
     (each offer is one IEEE division of identical doubles on both
     engines, so min-equality cannot flip on accumulation order);
-    rounding happens only at output. The offer table aggregates
+    rounding happens only at output. A zero quantity yields no offer
+    (``nullif``, the same on both engines): under ANSI a plain division
+    raises on it, and whether it did depended on whether the session's
+    plan had pruned that row first. The offer table aggregates
     lineitem down to (part, supplier) cardinality BEFORE any dim join,
     and the dim side (EUROPE suppliers) is broadcast-sized at every SF:
     at 100 TB the one big shuffle is the offers groupBy, reused by both
     the min subtree and the join-back probe."""
     li = _t(spark, sf_dir, "lineitem")
     offers = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("offer")
+        F.min(F.col("l_extendedprice") / F.nullif("l_quantity", F.lit(0))).alias("offer")
     )
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")

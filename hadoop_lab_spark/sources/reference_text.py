@@ -14,6 +14,9 @@ this is exactly how you'd land raw text into a first-pass bronze table.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,6 +64,37 @@ def naive_split(line: Column, delim: str) -> Column:
     )
     stripped = F.slice(arr, F.lit(1), F.size(arr) - trailing)
     return F.when(line == "", F.array(F.lit(""))).otherwise(stripped)
+
+
+def split_lines(
+    spark: SparkSession,
+    path: str,
+    delim: str,
+    *,
+    trim: bool = False,
+    keep: Column | None = None,
+) -> DataFrame:
+    """The lab parse front end: the lines of `path`, each split the Java
+    way ONCE, as the single array column `p`.
+
+    `trim` splits ``trim(value)`` (the whitespace-delimited labs);
+    `keep` is a predicate over the raw line column `value` (header or
+    blank-line guard), applied before the split.
+
+    The split sits in a one-element generator, ``explode(array(...))``,
+    which is an optimizer barrier: a filter on `p` refers to the
+    generator's output, so Catalyst cannot push it below the generator
+    and inline the whole split into it (SPARK-33544 also keeps
+    ``InferFiltersFromGenerate`` off ``CreateArray`` children). Through
+    a plain projection Catalyst would substitute the split into a lab's
+    arity guard, its cast guard and its projection, each re-running the
+    split and the fold of `naive_split`.
+    """
+    lines = read_lines(spark, path)
+    if keep is not None:
+        lines = lines.filter(keep)
+    line = F.trim(F.col("value")) if trim else F.col("value")
+    return lines.select(F.explode(F.array(naive_split(line, delim))).alias("p"))
 
 
 def field(parts: Column, idx: int) -> Column:
@@ -111,33 +145,36 @@ def strip_bom(line: Column) -> Column:
 
 def to_reference_lines(df: DataFrame, *cols: str) -> DataFrame:
     """Render rows as the reference's sink format (operators S7 + O1):
-    tab-separated values, globally sorted by the STRING form of the
-    first column (Hadoop sorts Text keys lexicographically — years sort
-    as strings, deliberately).
+    tab-separated values, sorted by the STRING form of the first column
+    (Hadoop sorts Text keys lexicographically — years sort as strings,
+    deliberately), in ONE partition — the reference's single reducer
+    (`lab2/WordCount.sh:155`).
 
-    Returns a 1-column DataFrame `line`; callers write with
-    ``.write.text`` (single file via coalesce(1) only when the
-    reference's one-reducer output shape is required).
+    One exchange to a single partition, then a sort inside it. A global
+    ``orderBy`` followed by ``coalesce(1)`` first runs a job that
+    samples keys for range partitioning, and the coalesce then folds
+    the sort stage into the single writing task anyway. Upstream stages
+    keep full parallelism; only the sink is single-task.
+
+    Returns a 1-column DataFrame `line`, in key order.
     """
     key = F.col(cols[0]).cast("string")
     return (
-        df.orderBy(key.asc())
+        df.repartition(1)
+        .sortWithinPartitions(key.asc())
         .select(F.concat_ws("\t", *[F.col(c).cast("string") for c in cols]).alias("line"))
     )
 
 
 def write_reference_output(df: DataFrame, path: str, *cols: str) -> None:
-    """Reference sink parity: single tab-separated text file, key-sorted
-    (the default 1-reduce-task shape, `lab2/WordCount.sh:155`).
-    coalesce(1) is sink-only — upstream stages keep full parallelism.
+    """Reference sink parity: one tab-separated text file, key-sorted
+    (``to_reference_lines``).
 
     The part file is renamed to ``part-r-00000`` — the exact MapReduce
     reducer-output name every reference walkthrough ``cat``s
-    (`lab2/WordCount.sh:158`), so existing muscle memory works verbatim."""
-    to_reference_lines(df, *cols).coalesce(1).write.mode("overwrite").text(path)
-    import glob as _glob
-    import os as _os
-
-    parts = _glob.glob(_os.path.join(path, "part-*"))
-    if len(parts) == 1 and _os.path.basename(parts[0]) != "part-r-00000":
-        _os.replace(parts[0], _os.path.join(path, "part-r-00000"))
+    (`lab2/WordCount.sh:158`), so existing muscle memory works verbatim.
+    An empty result still writes that one (empty) file."""
+    to_reference_lines(df, *cols).write.mode("overwrite").text(path)
+    parts = glob.glob(os.path.join(path, "part-*"))
+    if len(parts) == 1 and os.path.basename(parts[0]) != "part-r-00000":
+        os.replace(parts[0], os.path.join(path, "part-r-00000"))

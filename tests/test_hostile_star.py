@@ -316,3 +316,31 @@ def test_lane_survives_hostile_star(spark, hostile_star_dir, name):
         assert_matches_oracle(df, con, spec.oracle, name=f"hostile-star:{name}")
     finally:
         con.close()
+
+
+@pytest.mark.parametrize(
+    "confs",
+    [
+        {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+        {"spark.sql.adaptive.enabled": "false"},
+        {"spark.sql.adaptive.coalescePartitions.enabled": "false"},
+    ],
+    ids=["no_broadcast", "aqe_off", "no_coalesce"],
+)
+def test_q2_zero_quantity_under_plan_freedoms(spark, hostile_star_dir, confs):
+    """The fixture's ``l_quantity = 0.0`` row reaches q2's unit-price
+    division under every one of these plans (under the default plan it
+    may be pruned first); under ANSI a plain division raised there."""
+    spec = REGISTRY["q2_min_cost_supplier"]
+    saved = {k: spark.conf.get(k) for k in confs}
+    con = _con_for(hostile_star_dir)
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        df = spec.fn(spark, hostile_star_dir)
+        df.count()
+        assert_matches_oracle(df, con, spec.oracle, name="hostile-star:q2")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        con.close()

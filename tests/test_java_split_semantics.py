@@ -183,3 +183,52 @@ _LINE = st.builds(
 @given(lines=st.lists(_LINE, min_size=1, max_size=8))
 def test_property_parser_equals_java_twin(spark, lines):
     _assert_all_shapes_match(spark, lines)
+
+
+# --- array level: the split itself, not only what the lab shapes keep ---
+
+_DELIMS = (",", "::", r"\s+")
+
+
+def _spark_arrays(spark, lines):
+    """naive_split of every line under each delimiter, in one job."""
+    df = spark.createDataFrame([(i, ln) for i, ln in enumerate(lines)], ["i", "value"])
+    cols = [naive_split(F.col("value"), d).alias(f"d{k}") for k, d in enumerate(_DELIMS)]
+    rows = sorted(df.select("i", *cols).collect())
+    return [[list(r[f"d{k}"]) for r in rows] for k in range(len(_DELIMS))]
+
+
+def _assert_arrays_match(spark, lines):
+    got = _spark_arrays(spark, lines)
+    for k, d in enumerate(_DELIMS):
+        assert got[k] == [java_split(ln, d) for ln in lines], d
+
+
+_ARRAY_LINE = st.text(alphabet="ab1,: \t", min_size=0, max_size=12)
+
+
+@pytest.mark.usefixtures("spark")
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(lines=st.lists(_ARRAY_LINE, min_size=1, max_size=40))
+def test_property_split_array_equals_java_split(spark, lines):
+    """``naive_split(line, d) == java_split(line, d)`` element for
+    element, for every delimiter the labs use."""
+    _assert_arrays_match(spark, lines)
+
+
+def test_seeded_fuzz_split_array_equals_java_split(spark):
+    """A wide seeded sweep in a single job: lines drawn from the
+    delimiter characters themselves, where the leading, interior and
+    trailing empty-field runs live."""
+    import random
+
+    rnd = random.Random(20260)
+    alphabet = "ab,:: \t"
+    lines = DIVERGENCE_PROBES + [
+        "".join(rnd.choice(alphabet) for _ in range(rnd.randint(0, 16))) for _ in range(5000)
+    ]
+    _assert_arrays_match(spark, lines)
