@@ -27,12 +27,11 @@ never affect results.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 
+from hadoop_lab_spark.session import scoped_conf
 
-@contextmanager
+
 def partitioning_preserved(spark):
     """Compile-and-checkpoint scope that keeps the frame's hash
     partitioning VISIBLE to Catalyst across the checkpoint.
@@ -64,23 +63,14 @@ def partitioning_preserved(spark):
     Usage: build the DataFrame AND call :func:`tracked_checkpoint`
     inside the scope — Datasets compile their physical plan lazily at
     first materialization, so the AQE setting at CHECKPOINT time is
-    what the LogicalRDD inherits. The toggle is session-global for its
-    duration (the engine runs one plan build at a time per session);
-    the previous value is always restored, and the loop bodies that
-    consume the checkpoint still compile under the session's normal
-    AQE setting. Degrades to a plain no-op scope if the conf is not
-    readable (results never depend on this — tests/test_aqe_invariance
-    pins answer equality either way)."""
-    try:
-        prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    except Exception:
-        yield
-        return
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    what the LogicalRDD inherits. The toggle is a
+    :func:`~hadoop_lab_spark.session.scoped_conf`: session-global for
+    its duration, always restored, and a plain no-op scope on a session
+    that refuses the conf (results never depend on this —
+    tests/test_aqe_invariance pins answer equality either way). The
+    loop bodies that consume the checkpoint still compile under the
+    session's normal AQE setting."""
+    return scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
 def persistent_rdd_ids(sc) -> set[int] | None:

@@ -5,9 +5,14 @@ their ``./<Lab>.sh`` scripts consume and gets the same answers — this is
 the drop-in parity surface (the parquet-path queries in plans/parity.py
 express the same operators over the star schema for the oracle gate).
 
-Each function returns the final DataFrame; render/write with
-``sources.reference_text.to_reference_lines`` / ``write_reference_output``
-for the reference's `key\\tvalue`, string-sorted, single-file shape.
+Each function returns the final DataFrame; ``run_lab`` writes it in the
+reference's `key\\tvalue`, string-sorted, single-file shape through
+``sources.reference_text.write_reference_output``, which reads each text
+input with one scan task per core. Every lab but lab7 ends in a grouped
+aggregate, so its rows already come out of a shuffle and the sink
+gathers them into the one writing task without a second exchange;
+lab7's day-by-day rows have no aggregate (``MAP_ONLY_LABS``) and keep
+the sink's own exchange, so their scan and parse stay parallel.
 
 Determinism divergences (documented, SURVEY.md §2.10.7-8): collected
 strings are element-sorted, argmax ties break on the smallest witness —
@@ -218,6 +223,10 @@ LABS = {
     11: lab11_uber_trips,
 }
 
+#: Labs whose result has no grouped aggregate above the scan; every
+#: other lab's result already ends in an exchange.
+MAP_ONLY_LABS = frozenset({7})
+
 
 def run_lab(spark: SparkSession, lab: int, input_path: str, output_dir: str | None = None) -> DataFrame:
     """Run one lab pipeline; optionally write the reference-shaped output
@@ -226,5 +235,7 @@ def run_lab(spark: SparkSession, lab: int, input_path: str, output_dir: str | No
 
     df = LABS[lab](spark, input_path)
     if output_dir is not None:
-        write_reference_output(df, output_dir, *df.columns)
+        write_reference_output(
+            df, output_dir, *df.columns, ends_in_exchange=lab not in MAP_ONLY_LABS
+        )
     return df

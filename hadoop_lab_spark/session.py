@@ -14,11 +14,15 @@ Two entry points:
 - :func:`tune_session` — apply the runtime-settable subset of the same
   confs to a session we did *not* create (the verify driver passes its
   own session into ``__spark_entry__.entry``/``queries()``).
+
+:func:`scoped_conf` changes one conf for the length of a block and
+restores it.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -128,6 +132,34 @@ def tune_session(spark: SparkSession) -> SparkSession:
             # over a tuning hint.
             pass
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Scope in which the session conf ``key`` reads ``value``.
+
+    The setting is session-wide for the duration of the scope (the
+    engine runs one plan build or write at a time per session). The
+    previous value is always restored, and unset again if it was unset.
+    A session that refuses to read or set the conf runs the body
+    unchanged: like :func:`tune_session`, a scope that only tunes speed
+    or plan shape never fails the query."""
+    try:
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, value)
+        applied = True
+    except Exception:
+        applied = False
+    if not applied:
+        yield
+        return
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def get_spark(

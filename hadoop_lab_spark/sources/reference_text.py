@@ -20,9 +20,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: Java StringTokenizer's default delimiter set (`lab2/WordCount.sh:85`):
-#: space, tab, newline, CR, form-feed.
-TOKENIZER_DELIMS = "[ \t\n\r\x0c]+"
+from hadoop_lab_spark.session import scoped_conf
 
 
 def read_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -134,47 +132,61 @@ def skip_header_first_token(parts: Column, token: str) -> Column:
     return F.lower(field(parts, 0)) != token.lower()
 
 
-def strip_bom(line: Column) -> Column:
-    """Remove a UTF-8 BOM from the start of a line (§1.4.1).
-
-    The parity pipelines don't need this (the BOM'd header dies on
-    try_cast), but the engine exposes it for sources where the BOM'd
-    row IS data."""
-    return F.regexp_replace(line, "^﻿", "")
-
-
-def to_reference_lines(df: DataFrame, *cols: str) -> DataFrame:
+def to_reference_lines(df: DataFrame, *cols: str, ends_in_exchange: bool = False) -> DataFrame:
     """Render rows as the reference's sink format (operators S7 + O1):
     tab-separated values, sorted by the STRING form of the first column
     (Hadoop sorts Text keys lexicographically — years sort as strings,
     deliberately), in ONE partition — the reference's single reducer
     (`lab2/WordCount.sh:155`).
 
-    One exchange to a single partition, then a sort inside it. A global
-    ``orderBy`` followed by ``coalesce(1)`` first runs a job that
-    samples keys for range partitioning, and the coalesce then folds
-    the sort stage into the single writing task anyway. Upstream stages
-    keep full parallelism; only the sink is single-task.
+    The rows are brought to one partition and sorted inside it; a global
+    ``orderBy`` would first run a job that samples keys for range
+    partitioning, only for the single writing task to hold every row
+    anyway.
+
+    ``ends_in_exchange`` says that `df`'s plan already ends in an
+    exchange (a grouped aggregate). Then ``coalesce(1)`` stands in for
+    a second exchange: the final aggregate, the sort and the write run
+    in one task that reads the aggregate's shuffle — the reference's
+    single reducer — and one job is saved. Without it, as for a
+    map-only result (lab7), ``repartition(1)`` adds one exchange to a
+    single partition, so the scan and parse below it keep their
+    parallelism; a coalesce there would pull them into the one task.
 
     Returns a 1-column DataFrame `line`, in key order.
     """
     key = F.col(cols[0]).cast("string")
-    return (
-        df.repartition(1)
-        .sortWithinPartitions(key.asc())
-        .select(F.concat_ws("\t", *[F.col(c).cast("string") for c in cols]).alias("line"))
+    single = df.coalesce(1) if ends_in_exchange else df.repartition(1)
+    return single.sortWithinPartitions(key.asc()).select(
+        F.concat_ws("\t", *[F.col(c).cast("string") for c in cols]).alias("line")
     )
 
 
-def write_reference_output(df: DataFrame, path: str, *cols: str) -> None:
+def write_reference_output(
+    df: DataFrame, path: str, *cols: str, ends_in_exchange: bool = False
+) -> None:
     """Reference sink parity: one tab-separated text file, key-sorted
-    (``to_reference_lines``).
+    (``to_reference_lines``; ``ends_in_exchange`` as there).
+
+    The write runs with the text scans split across every core. A file
+    scan's split size is ``min(filesMaxPartitionBytes,
+    max(openCostInBytes, bytes / default parallelism))``, so the 4 MB
+    default open cost makes a lab input of a few MB one scan task.
+    With the open cost at 1 byte the split is about bytes / cores, and
+    inputs of at least 128 MB x cores split exactly as before. (At 0,
+    an input of fewer bytes than cores gets a split size of 0, which
+    Spark rejects.) Spark reads these values from the session conf only
+    (``FilePartition.maxSplitBytes``); a reader option cannot set them,
+    so the open cost is a :func:`~hadoop_lab_spark.session.scoped_conf`:
+    session-wide while the write runs, and always restored.
 
     The part file is renamed to ``part-r-00000`` — the exact MapReduce
     reducer-output name every reference walkthrough ``cat``s
     (`lab2/WordCount.sh:158`), so existing muscle memory works verbatim.
     An empty result still writes that one (empty) file."""
-    to_reference_lines(df, *cols).write.mode("overwrite").text(path)
+    lines = to_reference_lines(df, *cols, ends_in_exchange=ends_in_exchange)
+    with scoped_conf(df.sparkSession, "spark.sql.files.openCostInBytes", "1"):
+        lines.write.mode("overwrite").text(path)
     parts = glob.glob(os.path.join(path, "part-*"))
     if len(parts) == 1 and os.path.basename(parts[0]) != "part-r-00000":
         os.replace(parts[0], os.path.join(path, "part-r-00000"))

@@ -361,3 +361,20 @@ def test_ingest_merge_frees_pair_stage_blocks(spark):
         f"ingest lane pinned {len(grown)} block sets in one run; only "
         "the pair-list checkpoint and the CC labels may survive"
     )
+
+
+@pytest.mark.parametrize("pairs", ["lsh_candidate_pairs", "minhash_near_dups"])
+def test_band_self_join_is_merged_not_broadcast(spark, docs, pairs):
+    """The (band, band_sig) self-join stays a sort-merge join even where
+    both sides are small enough to broadcast: a broadcast on that
+    string key pins a 64 MB hash-relation page on the driver until the
+    ContextCleaner frees it."""
+    if pairs == "lsh_candidate_pairs":
+        df = D.lsh_candidate_pairs(docs, "doc_id", "text")
+    else:
+        df = D.minhash_near_dups(docs, "doc_id", "text", 0.5)
+    assert (1, 3) in {(r["id_a"], r["id_b"]) for r in df.collect()}
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    band_joins = [ln for ln in plan.splitlines() if "Join" in ln and "band_sig" in ln]
+    assert band_joins, plan
+    assert all("SortMergeJoin" in ln for ln in band_joins), plan

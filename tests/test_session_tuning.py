@@ -9,10 +9,13 @@ whatever the session owner had excluded (ADVICE r9).
 
 from __future__ import annotations
 
+import pytest
+
 from hadoop_lab_spark.session import (
     _EXCLUDED_RULES_KEY,
     _RUNTIME_CONF,
     _merged_excluded_rules,
+    scoped_conf,
     tune_session,
 )
 
@@ -75,3 +78,54 @@ def test_merge_handles_blank_and_duplicates():
     assert (
         _merged_excluded_rules(_FakeSpark(" x.Y , a.B "), "a.B") == "x.Y,a.B"
     )
+
+
+_AQE = "spark.sql.adaptive.enabled"
+
+
+@pytest.mark.parametrize("prev", [None, "true"], ids=["unset", "set"])
+def test_scoped_conf_sets_and_restores(spark, prev):
+    original = spark.conf.get(_AQE, None)
+    try:
+        if prev is None:
+            spark.conf.unset(_AQE)
+        else:
+            spark.conf.set(_AQE, prev)
+        with scoped_conf(spark, _AQE, "false"):
+            assert spark.conf.get(_AQE) == "false"
+        assert spark.conf.get(_AQE, None) == prev
+    finally:
+        if original is None:
+            spark.conf.unset(_AQE)
+        else:
+            spark.conf.set(_AQE, original)
+
+
+@pytest.mark.parametrize("refused", ["get", "set"])
+def test_scoped_conf_runs_the_body_on_a_session_that_refuses_the_conf(refused):
+    """A session that will not read or set the conf runs the body
+    unchanged instead of failing it, and nothing is restored after."""
+    calls = []
+
+    class _RefusingConf:
+        def get(self, key, default=None):
+            calls.append("get")
+            if refused == "get":
+                raise RuntimeError("conf is not readable")
+            return "x"
+
+        def set(self, key, value):
+            calls.append("set")
+            raise RuntimeError("conf is not modifiable")
+
+        def unset(self, key):
+            calls.append("unset")
+
+    class _FakeSpark:
+        conf = _RefusingConf()
+
+    ran = []
+    with scoped_conf(_FakeSpark(), "k", "v"):
+        ran.append(True)
+    assert ran == [True]
+    assert calls == (["get"] if refused == "get" else ["get", "set"])
