@@ -39,7 +39,7 @@ integer < 2^53, and the final avg is one correctly-rounded division).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_lab_spark.functions.numeric import (
@@ -746,12 +746,21 @@ def q_q4_priority_checking(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         per_part AS (
             SELECT l_partkey, sum(sval) AS sraw FROM n7 GROUP BY l_partkey
+        ),
+        cents AS (
+            SELECT l_partkey,
+                   CASE WHEN sraw < 0 THEN -((-sraw + 50) // 100)
+                        ELSE (sraw + 50) // 100 END AS cents
+            FROM per_part
+        ),
+        thresh AS (
+            SELECT CASE WHEN total < 0 THEN -((-total + 25000) // 50000)
+                        ELSE (total + 25000) // 50000 END AS thresh_cents
+            FROM (SELECT sum(sraw) AS total FROM per_part)
         )
-        SELECT l_partkey, round(sraw / 10000.0, 2) AS value
-        FROM per_part
-        WHERE round(sraw / 10000.0, 2) > (
-            SELECT round(sum(sraw) * 0.002 / 10000.0, 2) FROM per_part
-        )
+        SELECT l_partkey, CAST(cents AS DOUBLE) / 100 AS value
+        FROM cents, thresh
+        WHERE cents > thresh_cents
     """,
     doc="TPC-H Q11 on this schema (part value from lineitem revenue "
     "through NATION_7 suppliers; no partsupp ships): parts whose value "
@@ -770,11 +779,15 @@ def q_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     only engine-safe because revenue rides the q9 exact-integer policy:
     each row's value is the true scaled integer (cent-exact inputs),
     so per-part sums and the sum-of-sums are order-independent BIGINTs
-    and both engines round the bit-identical double at the very end.
-    (With raw doubles, sum-of-sums vs DuckDB's flat subquery sum could
-    disagree in the last ulp exactly at a rounding boundary.) The 1-row
-    threshold broadcasts onto the per-part rows — bounded by
-    construction."""
+    and the rounding to cents is integer arithmetic on them too
+    (:func:`_half_up_quotient`). Rounding the double ``sraw / 10000.0``
+    instead split the engines on half cents: Spark rounds the decimal
+    string half-up, DuckDB the binary value, so ``sraw`` = 1450 gave
+    0.15 on Spark and 0.14 on DuckDB (271 of the 4000 half-case values
+    50, 150, ..., 399950 disagreed). The value and the threshold are
+    compared as whole cents, and the value leaves as cents / 100, one
+    correctly rounded division on both engines. The 1-row threshold
+    broadcasts onto the per-part rows — bounded by construction."""
     li = _t(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -794,15 +807,27 @@ def q_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", sval.alias("sval")
     )
     per_part = n7.groupBy("l_partkey").agg(F.sum("sval").alias("sraw"))
-    total = per_part.agg(
-        F.round(F.sum("sraw") * 0.002 / 10000.0, 2).alias("thresh")
+    # sraw is in 1/10000 currency units: a cent is 100 of them, and 0.2%
+    # of the total in cents is total / 50000.
+    total = per_part.agg(F.sum("sraw").alias("total")).select(
+        _half_up_quotient("total", 50_000).alias("thresh_cents")
     )
+    cents = _half_up_quotient("sraw", 100)
     return (
         per_part.join(F.broadcast(total))
-        .filter(F.round(F.col("sraw") / 10000.0, 2) > F.col("thresh"))
-        .select(
-            "l_partkey", F.round(F.col("sraw") / 10000.0, 2).alias("value")
-        )
+        .filter(cents > F.col("thresh_cents"))
+        .select("l_partkey", (cents.cast("double") / 100).alias("value"))
+    )
+
+
+def _half_up_quotient(col: str, divisor: int) -> Column:
+    """``col / divisor`` for a BIGINT column, rounded half away from
+    zero in exact integer arithmetic (DuckDB: the same CASE with
+    ``//``)."""
+    half = divisor // 2
+    return F.expr(
+        f"CASE WHEN {col} < 0 THEN -((-{col} + {half}) div {divisor}) "
+        f"ELSE ({col} + {half}) div {divisor} END"
     )
 
 

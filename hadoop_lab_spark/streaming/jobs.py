@@ -29,7 +29,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hadoop_lab_spark.functions.numeric import micro_addend, nan_excluded
 from hadoop_lab_spark.operators.wordcount import wordcount as wordcount_op
-from hadoop_lab_spark.sources.tables import _normalize, table_path
+from hadoop_lab_spark.sources.tables import _normalize, parquet_schema, table_path
 
 #: Extra options merged into every streaming reader. Production leaves
 #: this empty; tests inject e.g. {"maxFilesPerTrigger": "1"} to force a
@@ -48,9 +48,11 @@ def _read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     the path would be a landing directory and the glob goes away.
 
     Streaming readers cannot infer a schema, so the raw schema comes
-    from a one-off batch metadata read of the SAME file, and `_normalize`
-    applies the batch loader's ts handling. Hardcoding the raw schema
-    here is how round 3's session-window bug happened: the testdata
+    from the batch reader's inference on the SAME file
+    (`parquet_schema`, which infers once per version of the file and
+    per inference conf), and `_normalize` applies the batch loader's ts
+    handling. Hardcoding the raw schema here is how round 3's
+    session-window bug happened: the testdata
     generator switched events.ts from TIMESTAMP(NANOS) (long under
     nanosAsLong) to TIMESTAMP(MICROS) (native timestamp), the pinned
     LongType schema kept "succeeding" — parquet surfaces µs as long when
@@ -59,7 +61,7 @@ def _read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     the stream schema from the batch reader keeps both paths identical
     under either file layout.
     """
-    schema = spark.read.parquet(table_path(sf_dir, name)).schema
+    schema = parquet_schema(spark, table_path(sf_dir, name))
     reader = spark.readStream.schema(schema).option(
         "pathGlobFilter", f"{name}.parquet"
     )
