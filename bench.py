@@ -1,19 +1,19 @@
 #!/usr/bin/env python
 """Benchmark harness: run the headline query set, print a compact JSON line.
 
-Output contract (driver captures the stdout TAIL, so the summary must be
-the LAST line and must be small — round 2's single giant line with all
-per-query timings inline was head-truncated and recorded as parsed:null):
+Output contract:
 
   line 1..k : per-query detail JSON (one object per line, prefixed
               "DETAIL ") — greppable, never part of the summary parse
   last line : {"metric": "...", "value": <total sec>, "unit": "sec",
-               "sf": ..., "repeats": N, "n_queries": N} — COMPACT; the
-               per-query map stays OUT of this line by design (inlining
-               it is what overflowed the tail capture in round 2)
+               "sf": ..., "repeats": N, "n_queries": N,
+               "detail_file": "bench_detail.json"}
 
-The full detail (median + min/max spread per query) is also written to
-bench_detail.json next to this script.
+The summary stays compact because a caller that keeps only the stdout
+tail (2000 characters) must still parse it whole; the per-query map
+lives in the DETAIL lines and in bench_detail.json next to this script
+(median + min/max spread, sweep position and start offset per lane,
+host load at start and end, and the demo and streaming lanes).
 
 Each query executes REPEATS times (median reported; env
 SPARK_GRAFT_BENCH_REPEATS, default 3) with a noop-sink write: unlike
@@ -24,60 +24,13 @@ no write cost (and no driver-side materialization like collect()). A
 warmup pass on the smallest table absorbs JVM/codegen startup so
 per-query numbers reflect the plans, not the JIT.
 
-Cross-round comparison (VERDICT r5 #1 — the 3-canary median misfired):
-the PRIMARY cross-round metric is the common-lane ratio — sum of this
-run's medians over the lanes shared with the pinned round-of-record
-reference (bench_reference.json, committed once per round) divided by
-the reference's sum over the same lanes. Canaries only bridge HOSTS:
-9 lanes spanning the plan families (scan-agg, scan-local text, salted
-window agg, multi-join, LSH band join, banded self-join + verify,
-iterative graph, percentile window, and — since the r9 pin —
-checkpoint-iterative CC, whose family swung 1.5x against a 0.98
-canary read in the r8 driver record), normalized by the TRIMMED MEAN of
-their current/reference ratios (drop the single lowest and highest —
-r5 showed one canary can move 37% for host-local reasons; the median
-of 3 gave that outlier a 1-in-3 chance of steering the headline).
-Both ratios are emitted; when they disagree beyond the documented host
-band, trust the common-lane ratio. Two normalized totals are emitted
-(ADVICE r6): normalized_total = total/canary_ratio (host-bridged,
-code regressions remain visible — the budget figure), and
-normalized_total_common = total/common_lane_ratio (host- AND
-code-drift-free headline; by construction it cannot show a shared-lane
-regression, so the regression gate is the common_lane_ratio itself).
-
-Gate rework (VERDICT r10 #1, host-normalized r11 #1): both r10
-round-of-record runs failed the sum-based gates at face value while the
-judge's per-lane MEDIAN ratio read 0.979 — a multi-minute host stall
-lands on whatever contiguous 10-lane block is running and dominates any
-sum, and the fixed-position canaries miss stalls that don't overlap
-them. Then the r11 driver record exposed the dual failure mode: a
-UNIFORMLY ~17%-slow window fails a raw median gate with zero code
-change (its median 1.138 equaled its canary 1.168; per-lane code effect
-0.97). The PRIMARY regression gate is therefore two-armed
-(`median_gate_pass`): raw median per-lane ratio <= 1.10 (absorbs
-localized stalls the canaries can't see) OR host-normalized median
-(median / trimmed-canary ratio) <= 1.03 (absorbs uniformly slow
-windows the canaries measure directly). A per-lane tail rule backs it:
-any lane > 2x its pin AND > 150 ms over it is named in the summary
-(`tail_lanes`); clearing order in BASELINE.md "r12 tail-clearing rule"
-(cleared by any other same-code record reading <= 1.2x; prefix-replay
-only for lanes elevated in >= 2 independent records). The budget is
-read against `normalized_total_clamped` (per-lane stall excess above
-TAIL_RATIO clamped out before the host bridge — that excess is the
-tail rule's jurisdiction, not the budget's); the raw sum-based ratios
-and totals stay emitted for chain continuity.
+Wall times compare only within one session: for a parent/change A/B,
+run perfbench (`perfbench/run.py`) interleaved.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (local[N], default all cores),
-     SPARK_GRAFT_BENCH_REPEATS (default 3; streaming lane always 1),
-     SPARK_GRAFT_BENCH_GC (default 0: no clearCache/System.gc()
-     barrier between lanes. The barrier was the r5 hypothesis for the
-     dedup_minhash_lsh 2.44→3.34 s cross-host delta; a full A/B at
-     sf0.1 [PERFORMANCE.md "GC-barrier A/B"] showed it makes the
-     bench SLOWER — median on/off lane ratio 1.19, e.g. dedup_simhash
-     1.69→2.55 s — while trimming the lsh lane only 3.31→3.10 s, and
-     that the lsh delta was the r5 builder HOST being fast, not
-     session-order heap pressure. Set 1 to reproduce the experiment).
+     SPARK_GRAFT_BENCH_REPEATS (default 3; demo and streaming lanes
+     always 1).
 """
 
 from __future__ import annotations
@@ -90,285 +43,27 @@ import sys
 import time
 
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
-_REFERENCE_PATH = os.path.join(_REPO_DIR, "bench_reference.json")
+DETAIL_FILE = "bench_detail.json"
 
 
-def _load_reference() -> dict | None:
-    """Pinned round-of-record medians (bench_reference.json): the canary
-    list + per-lane medians this run is compared against. Re-pinned once
-    per round from the driver's recorded detail."""
-    try:
-        with open(_REFERENCE_PATH) as f:
-            return json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-
-
-def _trimmed_mean_ratio(
-    timings: dict[str, float], reference: dict
-) -> float | None:
-    """Host-bridge factor: trimmed mean (drop min and max) of the canary
-    lanes' current/reference ratios. Needs >= 3 usable canaries so the
-    trim leaves at least one value."""
-    ratios = sorted(_canary_ratios(timings, reference).values())
-    if len(ratios) < 3:
-        return None
-    trimmed = ratios[1:-1]
-    return round(sum(trimmed) / len(trimmed), 3)
-
-
-def _canary_ratios(
-    timings: dict[str, float], reference: dict
-) -> dict[str, float]:
-    ref_q = reference.get("queries", {})
-    return {
-        n: timings[n] / ref_q[n]
-        for n in reference.get("canaries", [])
-        if n in timings and ref_q.get(n)
-    }
-
-
-def _warn_if_canaries_skewed(
-    timings: dict[str, float], reference: dict, trimmed: float | None
-) -> list[str]:
-    """VERDICT r8 #2: the r8 driver record's budget breach was a
-    FAMILY-skewed host window — the checkpoint-iterative family ran
-    1.3-1.5x while the (then all CPU-bound) canaries read 0.98, so the
-    scalar bridge silently under-corrected and the breach surfaced as
-    an unexplained gate failure a round later. The trim drops the
-    extreme ratios by design (one host-local outlier must not steer the
-    bridge), which means a lone diverging family canary can never move
-    the scalar — its job is THIS check: name any canary whose ratio
-    sits >20% from the trimmed mean, loudly, in the run's own output,
-    so the record carries the "this window is family-skewed; per-lane
-    numbers need tools/bench_lanes.py adjudication" flag."""
-    if trimmed is None:
-        return []
-    skewed = [
-        n
-        for n, r in sorted(_canary_ratios(timings, reference).items())
-        if abs(r / trimmed - 1.0) > 0.20
-    ]
-    for n in skewed:
-        ratio = _canary_ratios(timings, reference)[n]
-        print(
-            f"WARNING: canary {n} at {ratio:.2f}x its pin vs trimmed mean "
-            f"{trimmed:.2f} — family-skewed host window; the scalar "
-            "canary_ratio does not bridge this run's "
-            f"{n}-like lanes (adjudicate with tools/bench_lanes.py)",
-            file=sys.stderr,
-        )
-    return skewed
-
-
-def _common_lane_ratio(
-    timings: dict[str, float], reference: dict
-) -> tuple[float | None, int]:
-    """Σ current / Σ reference over the lanes present in both runs.
-    Immune to lane-set churn (new lanes don't inflate it, removed lanes
-    don't deflate it) — but NOT to host transients: a single
-    multi-minute stall lands on whatever 10-lane block is running and
-    dominates the sum (both r10 round-of-record runs failed this gate
-    at face value while the per-lane median read 0.979). Emitted for
-    chain continuity; the regression GATE is the median ratio below."""
-    ref_q = reference.get("queries", {})
-    common = [n for n in timings if ref_q.get(n)]
-    if not common:
-        return None, 0
-    cur = sum(timings[n] for n in common)
-    ref = sum(ref_q[n] for n in common)
-    return round(cur / ref, 3), len(common)
-
-
-#: Per-lane ratio above which a lane lands on the tail list: it must
-#: survive `tools/bench_lanes.py --prefix-replay` adjudication (or be
-#: named a regression and fixed) before the round closes. 2x sits well
-#: outside the documented small-lane noise band (±0.2 s absolute /
-#: 1.5x on sub-0.5 s lanes) while catching every real blowup this repo
-#: has seen (the r9 ingest regression read 10x; the r6 decimal cost,
-#: a deliberate priced trade, peaked at 5.5x on pricing_summary and
-#: would rightly have demanded the adjudication it got).
-TAIL_RATIO = 2.0
-
-#: Absolute-excess floor for the tail list (VERDICT r11 #3): a 2x ratio
-#: on a 0.17 s lane is 170 ms of noise sensitivity, not a regression
-#: signal — the r11/r12 watch pair (`count_per_event_type` +66 ms,
-#: `cumulative_monthly_revenue` +114 ms) burned three rounds of
-#: adjudication on exactly this class. A lane whose excess over pin is
-#: below this floor never makes the tail list regardless of ratio; a
-#: real regression on a small lane that matters will exceed it (the
-#: floor is ~the documented per-lane jitter band on this host).
-TAIL_ABS_FLOOR_SEC = 0.150
-
-#: PRIMARY regression gate thresholds (VERDICT r11 #1). The median gate
-#: passes when EITHER condition holds:
-#:   raw median_lane_ratio <= MEDIAN_GATE_RAW — catches canary-blind
-#:     LOCALIZED stalls (the r10 failure mode: stall block inflates the
-#:     sums, median reads through it);
-#:   median_lane_ratio_hostnorm (median / trimmed-canary ratio)
-#:     <= MEDIAN_GATE_HOSTNORM — catches UNIFORMLY slow host windows
-#:     (the r11 failure mode: the driver record's median 1.138 equaled
-#:     its canary 1.168 — per-lane code effect 0.97, judge same-tree
-#:     median 1.074 — yet the raw gate face-value-failed and consumed
-#:     an adjudication round). 1.03 is tight because the canaries are
-#:     never-touched lanes: after dividing out host speed, any residual
-#:     >3% median shift across 140+ shared lanes is code, not noise
-#:     (the r11 replicates read 0.91-0.97 hostnorm).
-MEDIAN_GATE_RAW = 1.10
-MEDIAN_GATE_HOSTNORM = 1.03
-
-
-def _median_lane_ratio(
-    timings: dict[str, float], reference: dict
-) -> tuple[float | None, int]:
-    """PRIMARY regression gate (VERDICT r10 #1): the MEDIAN of the
-    per-lane current/pin ratios over the common lanes. A host stall is
-    position-contiguous — it elevates whatever block of lanes is
-    running (10-30 of 147) and leaves the rest alone — so the median
-    reads through it, while the sum-based ratios above read whatever
-    the stall cost. A real code regression on the shared lanes moves
-    the median only if it is broad; a narrow real regression (one
-    lane) is the tail rule's job, not the median's. Gate: <= 1.10."""
-    ratios = _lane_ratios(timings, reference)
-    if not ratios:
-        return None, 0
-    return round(statistics.median(ratios.values()), 3), len(ratios)
-
-
-def _lane_ratios(
-    timings: dict[str, float], reference: dict
-) -> dict[str, float]:
-    ref_q = reference.get("queries", {})
-    return {
-        n: round(timings[n] / ref_q[n], 3)
-        for n in timings
-        if ref_q.get(n)
-    }
-
-
-def _lane_tail_threshold(
-    name: str, reference: dict, threshold: float = TAIL_RATIO
-) -> float:
-    """Per-lane tail threshold: the global TAIL_RATIO, raised to the
-    lane's documented wide band when the pin carries one
-    (`wide_band_lanes` in bench_reference.json — adjudicated same-code
-    swing bands; the r12 entry is `dedup_clusters` at 2.2x, whose
-    host-parity same-day reads spanned 0.94-2.01x with the r10-era
-    code reading inside the same distribution — BASELINE.md "r12
-    adjudication of dedup_clusters"). A genuinely regressed wide-band
-    lane still flags: real blowups in this repo's history read 3-10x."""
-    band = reference.get("wide_band_lanes", {}).get(name, 0.0)
-    return max(threshold, band)
-
-
-def _tail_lanes(
-    timings: dict[str, float],
-    reference: dict,
-    threshold: float = TAIL_RATIO,
-    abs_floor: float = TAIL_ABS_FLOOR_SEC,
-) -> dict[str, float]:
-    """Lanes above their tail threshold (global `threshold`, or the
-    lane's documented wide band if higher) AND more than `abs_floor`
-    seconds over pin, worst first — the per-lane tail rule's work list.
-    Non-empty means the record is not self-certifying. Clearing order
-    (BASELINE.md "r12 tail-clearing rule"): a tail lane reading <= 1.2x
-    in any other same-code full-bench record is CLEARED; only lanes
-    elevated in >= 2 independent records go to `tools/bench_lanes.py
-    --prefix-replay`; an uncleared lane is a clause-(a) regression."""
-    ref_q = reference.get("queries", {})
-    return dict(
-        sorted(
-            (
-                (n, r)
-                for n, r in _lane_ratios(timings, reference).items()
-                if r > _lane_tail_threshold(n, reference, threshold)
-                and timings[n] - ref_q[n] > abs_floor
-            ),
-            key=lambda kv: -kv[1],
-        )
-    )
-
-
-def _hostnorm_median(
-    median: float | None, canary_ratio: float | None
-) -> float | None:
-    """median_lane_ratio with the host bridge divided out (VERDICT r11
-    #1): the canaries are never-touched lanes, so median/canary isolates
-    the per-lane CODE effect on a uniformly slow (or fast) window. Gate
-    condition B: <= MEDIAN_GATE_HOSTNORM."""
-    if median is None or not canary_ratio:
-        return None
-    return round(median / canary_ratio, 3)
-
-
-def _median_gate_pass(
-    median: float | None, hostnorm: float | None
-) -> bool | None:
-    """Self-certifying median-gate verdict: pass when EITHER the raw
-    median or the host-normalized median clears its threshold (see the
-    MEDIAN_GATE_* constants for which failure mode each arm absorbs).
-    None (no reference / no canaries) means 'not evaluated'."""
-    if median is None:
-        return None
-    if median <= MEDIAN_GATE_RAW:
-        return True
-    return hostnorm is not None and hostnorm <= MEDIAN_GATE_HOSTNORM
-
-
-def _clamped_total(
-    timings: dict[str, float], reference: dict, threshold: float = TAIL_RATIO
-) -> float:
-    """Stall-clamped sweep total (VERDICT r11 #1): each pinned lane's
-    time is clamped at threshold x its pin before summing (unpinned
-    lanes enter raw). A multi-minute host stall lands on one contiguous
-    lane block and dominates any raw sum — both r11-era records failed
-    the budget on stall excess alone (driver 0.961, judge 1.123) while
-    the stall-free figure read ~0.88. Clamping at the tail threshold
-    removes exactly the excess the tail rule already adjudicates
-    per-lane, so the clamped budget and the tail list cannot
-    double-count the same stall: a real broad regression below 2x per
-    lane passes through the clamp untouched and still breaches the
-    budget."""
-    ref_q = reference.get("queries", {})
-    return round(
-        sum(
-            min(t, _lane_tail_threshold(n, reference, threshold) * ref_q[n])
-            if ref_q.get(n)
-            else t
-            for n, t in timings.items()
-        ),
-        3,
-    )
-
-
-def _gc_barrier(spark) -> None:
-    """Drain cross-lane state so lane N's heap/cache pressure cannot
-    leak into lane N+1's timing (the r5 host-drift hypothesis): drop
-    cached relations, then ask the JVM for a full GC."""
-    spark.catalog.clearCache()
-    spark.sparkContext._jvm.System.gc()
-
-
-def _time_query(fn, spark, sf_dir: str, repeats: int, gc: bool) -> list[float]:
+def _time_query(fn, spark, sf_dir: str, repeats: int) -> list[float]:
     """Median-of-N timing with per-lane BlockManager hygiene: each run
     of an iterative/ingest lane deliberately leaves its FINAL
     localCheckpoint block set pinned (the returned frame references
     it — checkpoint.py), so a 147-lane x 3-repeat sweep accumulates
     ~bounded-but-dead blocks once the noop sink has materialized each
-    lane (VERDICT r10 what's-wrong #3). Freeing the net-new pinned ids
-    AFTER the lane's last repeat completes the lifecycle: the lane is
-    done, nothing references its checkpoints again (each repeat
-    rebuilds the plan from scratch), and the freeing sits outside every
-    timed window. Skipped when either BlockManager snapshot fails
-    (None = unknown — never guess about live blocks)."""
+    lane. Freeing the net-new pinned ids AFTER the lane's last repeat
+    completes the lifecycle: the lane is done, nothing references its
+    checkpoints again (each repeat rebuilds the plan from scratch), and
+    the freeing sits outside every timed window. Skipped when either
+    BlockManager snapshot fails (None = unknown — never guess about
+    live blocks)."""
     from hadoop_lab_spark.checkpoint import persistent_rdd_ids, unpersist_rdds
 
     sc = spark.sparkContext
     before = persistent_rdd_ids(sc)
     times = []
     for _ in range(repeats):
-        if gc:
-            _gc_barrier(spark)
         start = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         times.append(time.perf_counter() - start)
@@ -380,11 +75,11 @@ def _time_query(fn, spark, sf_dir: str, repeats: int, gc: bool) -> list[float]:
 
 def _warn_if_contended() -> None:
     """A concurrent Spark JVM inflates isolated small lanes 1.5-2x
-    (measured r7: a CLI smoke running mid-bench pushed
-    top_parts_per_brand 0.18->0.38 s while barely moving the totals),
-    which poisons per-lane adjudication. Our own JVM hasn't started
-    yet, so ANY Spark JVM visible now is foreign. Warning only — the
-    run may be deliberate (e.g. a shared CI box)."""
+    (a CLI smoke running mid-bench pushed top_parts_per_brand
+    0.18->0.38 s while barely moving the totals), which poisons
+    per-lane comparisons. Our own JVM hasn't started yet, so ANY Spark
+    JVM visible now is foreign. Warning only — the run may be
+    deliberate (e.g. a shared CI box)."""
     try:
         for pid in os.listdir("/proc"):
             if not pid.isdigit():
@@ -398,7 +93,7 @@ def _warn_if_contended() -> None:
                 print(
                     f"WARNING: another Spark JVM is running (pid {pid}) — "
                     "bench medians will be contended; per-lane numbers "
-                    "are not adjudication-grade",
+                    "are not comparable",
                     file=sys.stderr,
                 )
                 return
@@ -407,9 +102,8 @@ def _warn_if_contended() -> None:
 
 
 def _loadavg() -> list[float] | None:
-    """Host 1/5/15-min load averages, for the run record. Every stall
-    adjudication so far (r8-r11) began by asking what the host was
-    doing — answer it from the record instead of memory."""
+    """Host 1/5/15-min load averages, for the run record: a slow lane
+    is first explained by what the host was doing at the time."""
     try:
         with open("/proc/loadavg") as f:
             return [float(x) for x in f.read().split()[:3]]
@@ -417,11 +111,25 @@ def _loadavg() -> list[float] | None:
         return None
 
 
+def summary_line(total: float, sf: float, repeats: int, n_queries: int) -> str:
+    """The last stdout line: one compact JSON object (module docstring)."""
+    return json.dumps(
+        {
+            "metric": "headline_query_set_wall_time",
+            "value": total,
+            "unit": "sec",
+            "sf": sf,
+            "repeats": repeats,
+            "n_queries": n_queries,
+            "detail_file": DETAIL_FILE,
+        }
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     _warn_if_contended()
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
-    gc = os.environ.get("SPARK_GRAFT_BENCH_GC", "0") == "1"
     match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(match.group(1).rstrip(".")) if match else -1.0
 
@@ -443,13 +151,11 @@ def main() -> None:
     for name, spec in sorted(REGISTRY.items()):
         if not spec.bench:
             continue
-        # Sweep position + wall-clock offset per lane: every stall
-        # adjudication (r8-r11) decomposed the record by WHEN a lane ran
-        # — both r10 records' excesses were position-contiguous blocks.
-        # Record it so the decomposition is a jq query, not a judge
-        # reconstruction from alphabetical order.
+        # Sweep position + wall-clock offset per lane: a host stall
+        # elevates whatever contiguous block of lanes is running, so a
+        # slow lane is read against its neighbours in run order.
         t_off = time.perf_counter() - sweep_start
-        times = _time_query(spec.fn, spark, sf_dir, repeats, gc)
+        times = _time_query(spec.fn, spark, sf_dir, repeats)
         timings[name] = round(statistics.median(times), 3)
         detail[name] = {
             "median": timings[name],
@@ -463,13 +169,13 @@ def main() -> None:
         print(f"DETAIL {json.dumps({name: detail[name]})}", flush=True)
 
     # Demo lanes (bench=False, tagged "demo"): priced knob demos kept out
-    # of the headline set (VERDICT r5 #5) but still timed once here so
-    # the PERFORMANCE.md pricing tables track live numbers.
+    # of the headline set but still timed once here so the
+    # PERFORMANCE.md pricing tables track live numbers.
     demos: dict[str, float] = {}
     for name, spec in sorted(REGISTRY.items()):
         if spec.bench or "demo" not in spec.tags:
             continue
-        times = _time_query(spec.fn, spark, sf_dir, 1, gc)
+        times = _time_query(spec.fn, spark, sf_dir, 1)
         demos[name] = round(times[0], 3)
         print(f"DETAIL {json.dumps({name: {'median': demos[name], 'demo': True}})}", flush=True)
 
@@ -480,102 +186,20 @@ def main() -> None:
     for name, spec in sorted(REGISTRY.items()):
         if spec.bench or "streaming" not in spec.tags:
             continue
-        times = _time_query(spec.fn, spark, sf_dir, 1, gc)
+        times = _time_query(spec.fn, spark, sf_dir, 1)
         streaming[name] = round(times[0], 3)
         print(f"DETAIL {json.dumps({name: {'median': streaming[name], 'streaming': True}})}", flush=True)
 
     total = round(sum(timings.values()), 3)
 
-    # Normalization vs the pinned round-of-record (sf0.1 only — that is
-    # the reference SF; at other SFs both ratios are emitted as null).
-    reference = _load_reference() if sf == 0.1 else None
-    canary_ratio = None
-    common_lane_ratio, n_common = None, 0
-    median_lane_ratio, n_ratio_lanes = None, 0
-    tail: dict[str, float] = {}
-    skewed_canaries: list[str] = []
-    if reference:
-        canary_ratio = _trimmed_mean_ratio(timings, reference)
-        common_lane_ratio, n_common = _common_lane_ratio(timings, reference)
-        median_lane_ratio, n_ratio_lanes = _median_lane_ratio(
-            timings, reference
-        )
-        tail = _tail_lanes(timings, reference)
-        for name, ratio in tail.items():
-            print(
-                f"WARNING: tail lane {name} at {ratio}x its pin (> "
-                f"{TAIL_RATIO}x) — not self-certifying; adjudicate with "
-                "tools/bench_lanes.py --prefix-replay before trusting "
-                "this record",
-                file=sys.stderr,
-            )
-        skewed_canaries = _warn_if_canaries_skewed(
-            timings, reference, canary_ratio
-        )
-    median_lane_ratio_hostnorm = _hostnorm_median(
-        median_lane_ratio, canary_ratio
-    )
-    median_gate = _median_gate_pass(
-        median_lane_ratio, median_lane_ratio_hostnorm
-    )
-    total_clamped = _clamped_total(timings, reference) if reference else None
-    normalized_total = (
-        round(total / canary_ratio, 3) if canary_ratio else None
-    )
-    # Stall-clamped budget figure (VERDICT r11 #1): host-bridged like
-    # normalized_total, but with per-lane stall excess (>TAIL_RATIO x
-    # pin) clamped out of the sum first — the figure the s/q budget is
-    # read against on a stall-pocked window (the tail rule adjudicates
-    # the clamped-out excess per-lane; this sum must not re-litigate it).
-    normalized_total_clamped = (
-        round(total_clamped / canary_ratio, 3)
-        if total_clamped is not None and canary_ratio
-        else None
-    )
-    # ADVICE r6: also emit the PRIMARY metric as a normalized total, so
-    # a canary-only host anomaly that survives the trim cannot steer the
-    # only headline figure. The two totals answer different questions —
-    # total/canary_ratio divides out ONLY host speed (canaries are
-    # never-touched lanes, so code regressions stay visible in it),
-    # while total/common_lane_ratio divides out host AND code drift on
-    # the shared lanes (it converges to the reference total scaled by
-    # lane-mix, so it is a host-free headline but NOT a regression
-    # signal — the common_lane_ratio itself is the regression gate).
-    # When the two normalized totals disagree beyond the documented
-    # host band, trust the common-lane figure (module docstring).
-    normalized_total_common = (
-        round(total / common_lane_ratio, 3) if common_lane_ratio else None
-    )
-
-    with open(os.path.join(_REPO_DIR, "bench_detail.json"), "w") as f:
+    with open(os.path.join(_REPO_DIR, DETAIL_FILE), "w") as f:
         json.dump(
             {
                 "sf": sf,
                 "repeats": repeats,
-                "gc_barrier": gc,
-                # host 1/5/15-min load at sweep start and at write time:
-                # the first question of every stall adjudication
                 "loadavg_start": load_start,
                 "loadavg_end": _loadavg(),
                 "total_median_sec": total,
-                "canary_ratio": canary_ratio,
-                "canaries": (reference or {}).get("canaries"),
-                "reference_label": (reference or {}).get("label"),
-                "common_lane_ratio": common_lane_ratio,
-                "n_common_lanes": n_common,
-                "median_lane_ratio": median_lane_ratio,
-                "median_lane_ratio_hostnorm": median_lane_ratio_hostnorm,
-                "median_gate_pass": median_gate,
-                "n_ratio_lanes": n_ratio_lanes,
-                "total_clamped_sec": total_clamped,
-                "normalized_total_clamped_sec": normalized_total_clamped,
-                "tail_lanes": tail,
-                "lane_ratios": (
-                    _lane_ratios(timings, reference) if reference else {}
-                ),
-                "skewed_canaries": skewed_canaries,
-                "normalized_total_sec": normalized_total,
-                "normalized_total_common_sec": normalized_total_common,
                 "queries": detail,
                 "demos": demos,
                 "streaming": streaming,
@@ -585,55 +209,9 @@ def main() -> None:
             sort_keys=True,
         )
 
-    # The compact summary MUST be the last stdout line (driver tail-parse).
+    # The compact summary MUST be the last stdout line.
     sys.stdout.flush()
-    print(
-        json.dumps(
-            {
-                "metric": "headline_query_set_wall_time",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "repeats": repeats,
-                "n_queries": len(timings),
-                "canary_ratio": canary_ratio,
-                "common_lane_ratio": common_lane_ratio,
-                "n_common_lanes": n_common,
-                # PRIMARY regression gate (VERDICT r10 #1 + r11 #1):
-                # pass when raw median <= 1.10 (absorbs localized
-                # stalls) OR hostnorm median (median/canary) <= 1.03
-                # (absorbs uniformly slow windows — the r11 driver
-                # record's mode). median_gate_pass is the verdict.
-                "median_lane_ratio": median_lane_ratio,
-                "median_lane_ratio_hostnorm": median_lane_ratio_hostnorm,
-                "median_gate_pass": median_gate,
-                # per-lane tail rule: lanes > 2x pin (worst first, first
-                # 10 named here, full map in bench_detail.json) — each
-                # must survive tools/bench_lanes.py --prefix-replay or
-                # be treated as a regression before the round closes
-                "n_tail_lanes": len(tail),
-                "tail_lanes": dict(list(tail.items())[:10]),
-                # names of canaries >20% off the trimmed mean: non-empty
-                # means the window is family-skewed and per-lane numbers
-                # need bench_lanes.py adjudication (VERDICT r8 #2)
-                "skewed_canaries": skewed_canaries,
-                "normalized_total": normalized_total,
-                # the budget figure on a stall-pocked window: per-lane
-                # excess above TAIL_RATIO x pin clamped out (that excess
-                # is the tail rule's jurisdiction), then host-bridged
-                "normalized_total_clamped": normalized_total_clamped,
-                "normalized_total_common": normalized_total_common,
-                # machine-recorded budget provenance (VERDICT r7 #3):
-                # the pin tool chains budget x canary-bridge per re-pin,
-                # so the unit the normalized figures are read in is data
-                "budget_normalized_spq": (reference or {}).get(
-                    "budget_normalized_spq"
-                ),
-                "reference_label": (reference or {}).get("label"),
-                "detail_file": "bench_detail.json",
-            }
-        )
-    )
+    print(summary_line(total, sf, repeats, len(timings)))
     spark.stop()
 
 

@@ -1,7 +1,5 @@
-"""Unit tests for bench.py's cross-round normalization math (VERDICT
-r5 #1: the 3-canary median produced a headline the common-lane
-decomposition contradicted — these pin the reworked scheme so its
-semantics can't silently drift)."""
+"""Unit tests for bench.py: per-lane checkpoint hygiene, the host-load
+probe, and the compact last-line contract."""
 
 from __future__ import annotations
 
@@ -9,358 +7,10 @@ import json
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-
-
-def _ref(canaries, queries):
-    return {"canaries": canaries, "queries": queries}
-
-
-def test_trimmed_mean_drops_single_outlier():
-    """One canary moving 37% for host-local reasons (the r5 failure
-    mode) must not steer the ratio: with 8 canaries at 1.0 and one
-    outlier at 1.37, the trim drops it entirely."""
-    queries = {f"c{i}": 1.0 for i in range(8)}
-    timings = {f"c{i}": 1.0 for i in range(8)}
-    timings["c7"] = 1.37  # the host-local outlier
-    r = bench._trimmed_mean_ratio(timings, _ref(list(queries), queries))
-    assert r == 1.0
-
-
-def test_trimmed_mean_tracks_uniform_host_shift():
-    queries = {f"c{i}": 1.0 for i in range(8)}
-    timings = {f"c{i}": 1.2 for i in range(8)}
-    r = bench._trimmed_mean_ratio(timings, _ref(list(queries), queries))
-    assert r == pytest.approx(1.2)
-
-
-def test_trimmed_mean_needs_three_canaries():
-    """Below 3 usable canaries the trim would leave nothing (or a
-    single unprotected value) — emit null instead of a fake ratio."""
-    queries = {"a": 1.0, "b": 1.0}
-    assert bench._trimmed_mean_ratio({"a": 1.0, "b": 1.0}, _ref(["a", "b"], queries)) is None
-    # missing lanes / zero references don't count as usable
-    queries3 = {"a": 1.0, "b": 1.0, "c": 0.0}
-    assert (
-        bench._trimmed_mean_ratio({"a": 1.0, "b": 1.0, "c": 1.0}, _ref(["a", "b", "c"], queries3))
-        is None
-    )
-
-
-def test_skew_warning_names_diverging_canary():
-    """VERDICT r8 #2: a lone family canary >20% off the trimmed mean is
-    (by design) trimmed out of the scalar bridge — it must instead be
-    NAMED in the record so a family-skewed window flags itself. The r8
-    driver scenario: 8 canaries near 1.0, dedup_clusters at 1.48."""
-    queries = {f"c{i}": 1.0 for i in range(8)} | {"dedup_clusters": 1.0}
-    timings = {f"c{i}": 1.0 for i in range(8)} | {"dedup_clusters": 1.48}
-    ref = _ref(list(queries), queries)
-    trimmed = bench._trimmed_mean_ratio(timings, ref)
-    assert trimmed == 1.0  # the scalar bridge is protected from it...
-    skewed = bench._warn_if_canaries_skewed(timings, ref, trimmed)
-    assert skewed == ["dedup_clusters"]  # ...and the record names it
-
-
-def test_skew_warning_quiet_on_uniform_shift():
-    """A uniform host shift (every canary at 1.3) is exactly what the
-    scalar bridge handles — no skew flag."""
-    queries = {f"c{i}": 1.0 for i in range(9)}
-    timings = {f"c{i}": 1.3 for i in range(9)}
-    ref = _ref(list(queries), queries)
-    trimmed = bench._trimmed_mean_ratio(timings, ref)
-    assert bench._warn_if_canaries_skewed(timings, ref, trimmed) == []
-    assert bench._warn_if_canaries_skewed(timings, ref, None) == []
-
-
-def test_committed_reference_has_checkpoint_iterative_canary():
-    """VERDICT r8 #2 'done' bar: the 9th canary (checkpoint-iterative
-    family representative) is present in the committed pin."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ref = json.load(open(os.path.join(repo, "bench_reference.json")))
-    assert "dedup_clusters" in ref["canaries"]
-    assert len(ref["canaries"]) == 9
-
-
-def test_common_lane_ratio_ignores_lane_set_churn():
-    """New lanes must not inflate the ratio and removed lanes must not
-    deflate it — only the shared set is compared, as sums (so a big
-    lane's regression can't hide behind many fast ones averaging)."""
-    ref_q = {"a": 2.0, "b": 1.0, "removed": 5.0}
-    timings = {"a": 2.0, "b": 2.0, "brand_new": 99.0}
-    ratio, n = bench._common_lane_ratio(timings, _ref([], ref_q))
-    assert n == 2
-    assert ratio == pytest.approx((2.0 + 2.0) / (2.0 + 1.0), abs=1e-3)
-
-
-def test_common_lane_ratio_empty_intersection_is_null():
-    ratio, n = bench._common_lane_ratio({"x": 1.0}, _ref([], {"y": 1.0}))
-    assert ratio is None and n == 0
-
-
-def test_committed_reference_satisfies_bench_contract():
-    """The committed bench_reference.json must be usable by bench.py:
-    sf0.1, >= 6 canaries all present with nonzero medians, and every
-    canary pinned by a plan-shape or oracle test elsewhere (here: just
-    that they are registered lanes)."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ref = json.load(open(os.path.join(repo, "bench_reference.json")))
-    assert ref["sf"] == 0.1
-    assert len(ref["canaries"]) >= 6
-    for c in ref["canaries"]:
-        assert ref["queries"].get(c), f"canary {c} missing/zero in reference"
-
-    from hadoop_lab_spark.plans.registry import REGISTRY, load_all_query_modules
-
-    load_all_query_modules()
-    for c in ref["canaries"]:
-        assert c in REGISTRY, f"canary {c} is not a registered lane"
-        assert REGISTRY[c].bench, f"canary {c} must be in the headline set"
-    # the reference lane set must be the driver-recorded round, i.e. a
-    # superset is fine (lanes may be demoted later) but canaries never
-    ref_lanes = set(ref["queries"])
-    assert ref_lanes & set(REGISTRY), "reference shares no lanes with registry"
-
-
-def test_pin_tool_round_trips(tmp_path):
-    """tools/pin_bench_reference.py regenerates a reference equivalent
-    to what bench.py consumes."""
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    detail = json.load(open(os.path.join(repo, "bench_detail.json")))
-    assert detail["sf"] == 0.1  # committed record must be the sf0.1 run
-    out_path = str(tmp_path / "ref.json")
-    out = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(repo, "tools", "pin_bench_reference.py"),
-            "test-label",
-            os.path.join(repo, "bench_detail.json"),
-            out_path,
-        ],
-        capture_output=True,
-        text=True,
-        check=False,
-    )
-    assert out.returncode == 0, out.stderr
-    ref = json.load(open(out_path))
-    assert ref["label"] == "test-label"
-    assert set(ref["canaries"]) <= set(ref["queries"])
-
-
-def test_pin_tool_budget_chain_is_machine_recorded(tmp_path):
-    """VERDICT r7 #3: each re-pin rebases the normalized-budget unit, so
-    the pin tool must record the conversion as data — pin label, the
-    measured canary bridge vs the previous pin, and the converted
-    budget, appended to an auditable chain. Pinning the same detail on
-    top of itself must read bridge 1.0 and leave the budget unchanged."""
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_path = str(tmp_path / "ref.json")
-    tool = os.path.join(repo, "tools", "pin_bench_reference.py")
-    detail = os.path.join(repo, "bench_detail.json")
-
-    # first pin: fresh file — ADVICE r8: the seed must be HONORED (it
-    # used to be silently ignored, writing budget=null and forcing a
-    # hand-edit of the JSON here), recorded as a bridge-1.0 chain entry
-    # so the chain invariant (to = from x bridge) holds from link one.
-    r1 = subprocess.run(
-        [sys.executable, tool, "pin-one", detail, out_path, "--budget-seed=0.80"],
-        capture_output=True, text=True, check=False,
-    )
-    assert r1.returncode == 0, r1.stderr
-    ref1 = json.load(open(out_path))
-    assert ref1["budget_normalized_spq"] == 0.80  # seed honored on fresh pin
-    assert ref1["budget_chain"] == [
-        {
-            "from_label": None,
-            "from_budget_spq": 0.80,
-            "canary_bridge": 1.0,
-            "to_budget_spq": 0.80,
-        }
-    ]
-
-    r2 = subprocess.run(
-        [sys.executable, tool, "pin-two", detail, out_path],
-        capture_output=True, text=True, check=False,
-    )
-    assert r2.returncode == 0, r2.stderr
-    ref2 = json.load(open(out_path))
-    assert ref2["previous_pin_label"] == "pin-one"
-    assert ref2["canary_bridge_vs_previous_pin"] == 1.0  # same medians
-    assert ref2["budget_normalized_spq"] == 0.80
-    assert ref2["budget_chain"][-1] == {
-        "from_label": "pin-one",
-        "from_budget_spq": 0.80,
-        "canary_bridge": 1.0,
-        "to_budget_spq": 0.80,
-    }
-
-
-def test_committed_reference_carries_the_budget_chain():
-    """The committed bench_reference.json must carry the machine-recorded
-    budget provenance (r9 pin: 0.85 r6-units x 0.97 x 0.98 = 0.808),
-    and the chain must be arithmetically self-consistent at 4-decimal
-    precision — per-link round(x, 2) silently tightened the unit
-    conversion ~0.5% per re-pin until the r9 round figure 'breached' by
-    less than the accumulated rounding (BASELINE.md 'r9 budget-chain
-    precision')."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ref = json.load(open(os.path.join(repo, "bench_reference.json")))
-    assert ref["budget_normalized_spq"] is not None
-    chain = ref["budget_chain"]
-    assert chain, "empty budget chain on the committed pin"
-    assert chain[-1]["to_budget_spq"] == ref["budget_normalized_spq"]
-    assert 0.5 < ref["budget_normalized_spq"] < 1.5  # sanity band
-    for prev, link in zip(chain, chain[1:]):
-        assert link["from_budget_spq"] == prev["to_budget_spq"], (
-            "chain discontinuity: a link's from_budget does not equal "
-            "the previous link's to_budget"
-        )
-    for link in chain:
-        assert link["to_budget_spq"] == pytest.approx(
-            round(link["from_budget_spq"] * link["canary_bridge"], 4)
-        ), f"link arithmetic broken at 4dp: {link}"
-
-
-def test_median_lane_ratio_reads_through_contiguous_stall():
-    """VERDICT r10 #1: a host stall elevates a contiguous ~20% block of
-    lanes 2-8x while everything else sits at ~0.98 (both r10
-    round-of-record records showed exactly this). The sum-based ratio
-    breaches; the median must read the code truth."""
-    ref_q = {f"q{i:03d}": 1.0 for i in range(100)}
-    timings = {n: 0.98 for n in ref_q}
-    for i in range(20):  # the stalled block
-        timings[f"q{i:03d}"] = 4.0
-    ref = _ref([], ref_q)
-    common, _ = bench._common_lane_ratio(timings, ref)
-    median, n = bench._median_lane_ratio(timings, ref)
-    assert common > 1.10  # the old gate breaches on the stall...
-    assert median == pytest.approx(0.98) and n == 100  # ...the new one doesn't
-
-
-def test_median_lane_ratio_catches_broad_regression():
-    """A real broad regression (every lane 15% slower at host parity)
-    must still trip the <= 1.10 gate."""
-    ref_q = {f"q{i}": 1.0 for i in range(30)}
-    timings = {n: 1.15 for n in ref_q}
-    median, _ = bench._median_lane_ratio(timings, _ref([], ref_q))
-    assert median == pytest.approx(1.15)
-
-
-def test_median_lane_ratio_ignores_lane_set_churn():
-    ref_q = {"a": 1.0, "removed": 9.0}
-    timings = {"a": 1.05, "brand_new": 99.0}
-    median, n = bench._median_lane_ratio(timings, _ref([], ref_q))
-    assert median == pytest.approx(1.05) and n == 1
-    assert bench._median_lane_ratio({"x": 1.0}, _ref([], {"y": 1.0})) == (None, 0)
-
-
-def test_tail_lanes_names_blowups_worst_first():
-    """The tail rule's work list: lanes > 2x pin, sorted worst first —
-    a narrow real regression (the r9 ingest 10x) lands HERE even when
-    the median stays green."""
-    ref_q = {"ok": 1.0, "bad": 1.0, "worse": 1.0, "edge": 1.0}
-    timings = {"ok": 1.1, "bad": 2.5, "worse": 6.0, "edge": 2.0}
-    tail = bench._tail_lanes(timings, _ref([], ref_q))
-    assert list(tail) == ["worse", "bad"]  # 2.0x exactly is NOT tail
-    assert tail["worse"] == pytest.approx(6.0)
-    assert bench._tail_lanes({"ok": 0.9}, _ref([], {"ok": 1.0})) == {}
-
-
-def test_tail_lanes_absolute_floor_drops_small_lane_jitter():
-    """VERDICT r11 #3: a 2x ratio on a sub-0.2 s lane is noise
-    sensitivity (the watch-pair class: +66/+114 ms absolute), not a
-    regression signal — excess under 150 ms never makes the tail list.
-    A genuinely elevated lane (excess > floor) still does."""
-    ref_q = {"tiny": 0.10, "small": 0.30, "big": 1.0}
-    timings = {"tiny": 0.24, "small": 0.75, "big": 3.0}
-    tail = bench._tail_lanes(timings, _ref([], ref_q))
-    # tiny: 2.4x but +140 ms excess -> floored out; small: 2.5x and
-    # +450 ms -> named; big: 3x and +2 s -> named, worst first
-    assert list(tail) == ["big", "small"]
-    # floor boundary: exactly 150 ms excess does not qualify (strict >)
-    assert bench._tail_lanes({"q": 0.30}, _ref([], {"q": 0.15})) == {}
-
-
-def test_hostnorm_median_divides_out_uniform_host_shift():
-    """VERDICT r11 #1 arm B: the r11 driver record's mode — median
-    1.138 on a canary-1.168 window is a per-lane code effect of 0.974
-    and must PASS the two-armed gate; the same median at canary parity
-    is a real broad regression and must FAIL."""
-    assert bench._hostnorm_median(1.138, 1.168) == pytest.approx(0.974)
-    # uniformly slow window: raw fails, hostnorm passes -> gate passes
-    assert bench._median_gate_pass(1.138, bench._hostnorm_median(1.138, 1.168))
-    # host parity, broad regression: both arms fail -> gate fails
-    assert not bench._median_gate_pass(1.138, bench._hostnorm_median(1.138, 1.0))
-    # localized stall absorbed by the raw arm (r10 mode): canary blind
-    # (parity) but median reads through the stall block
-    assert bench._median_gate_pass(0.98, bench._hostnorm_median(0.98, 1.0))
-    # no reference -> not evaluated, never a fake verdict
-    assert bench._median_gate_pass(None, None) is None
-    assert bench._hostnorm_median(None, 1.1) is None
-    assert bench._hostnorm_median(1.1, None) is None
-    # hostnorm unavailable (canary null): raw arm alone decides
-    assert bench._median_gate_pass(1.05, None) is True
-    assert bench._median_gate_pass(1.2, None) is False
-
-
-def test_clamped_total_removes_exactly_the_stall_excess():
-    """VERDICT r11 #1: the stall-clamped budget figure. A stall block at
-    4x pin contributes at most TAIL_RATIO x pin per lane to the clamped
-    sum; lanes under the threshold and unpinned lanes enter raw — so a
-    real broad sub-2x regression passes through the clamp untouched and
-    still breaches the budget."""
-    ref_q = {"a": 1.0, "b": 1.0, "c": 2.0}
-    timings = {"a": 4.0, "b": 0.9, "c": 2.2, "new_lane": 0.5}
-    got = bench._clamped_total(timings, _ref([], ref_q))
-    # a clamped 4.0 -> 2.0; b raw 0.9 (1.1x < 2x); c raw 2.2; new raw 0.5
-    assert got == pytest.approx(2.0 + 0.9 + 2.2 + 0.5)
-    # broad 1.5x regression: nothing clamps, the excess stays visible
-    broad = {n: 1.5 * v for n, v in ref_q.items()}
-    assert bench._clamped_total(broad, _ref([], ref_q)) == pytest.approx(
-        1.5 * sum(ref_q.values())
-    )
-
-
-def test_wide_band_lane_raises_tail_threshold_only_for_that_lane():
-    """r12 dedup_clusters adjudication: a lane with a documented wide
-    band in the pin (`wide_band_lanes`) only tails above ITS band; the
-    global 2x threshold still applies to every other lane, and a
-    wide-band lane beyond its band still flags (real blowups read
-    3-10x in this repo's history)."""
-    ref = _ref([], {"swingy": 1.0, "normal": 1.0})
-    ref["wide_band_lanes"] = {"swingy": 2.2}
-    assert bench._lane_tail_threshold("swingy", ref) == 2.2
-    assert bench._lane_tail_threshold("normal", ref) == bench.TAIL_RATIO
-    # 2.1x on the banded lane: inside its documented swing, not tail
-    assert bench._tail_lanes({"swingy": 2.1, "normal": 0.9}, ref) == {}
-    # the same 2.1x on a normal lane IS tail
-    assert list(bench._tail_lanes({"swingy": 0.9, "normal": 2.1}, ref)) == [
-        "normal"
-    ]
-    # beyond the band the banded lane flags too
-    assert list(bench._tail_lanes({"swingy": 2.5, "normal": 0.9}, ref)) == [
-        "swingy"
-    ]
-    # the clamped budget clamps the banded lane at ITS band, not 2x —
-    # more of its excess stays visible to the budget (conservative)
-    got = bench._clamped_total({"swingy": 3.0, "normal": 3.0}, ref)
-    assert got == pytest.approx(2.2 + 2.0)
-
-
-def test_committed_reference_carries_the_dedup_clusters_band():
-    """The committed pin must carry the r12-adjudicated band so the
-    tail machinery honors it, and the pin tool must carry it through
-    future re-pins (WIDE_BAND_LANES)."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ref = json.load(open(os.path.join(repo, "bench_reference.json")))
-    assert ref["wide_band_lanes"] == {"dedup_clusters": 2.2}
+from tests.conftest import SF_DIR  # noqa: E402
 
 
 def test_time_query_frees_lane_checkpoint_blocks(spark):
@@ -379,9 +29,7 @@ def test_time_query_frees_lane_checkpoint_blocks(spark):
     before = persistent_rdd_ids(sc)
     assert before is not None
     for lane in ("dedup_clusters", "pagerank_event_handoff"):
-        bench._time_query(
-            REGISTRY[lane].fn, spark, "/root/testdata/sf0.001", 2, False
-        )
+        bench._time_query(REGISTRY[lane].fn, spark, SF_DIR, 2)
     leaked = persistent_rdd_ids(sc) - before
     assert leaked == set(), f"back-to-back lanes left blocks pinned: {leaked}"
 
@@ -394,3 +42,23 @@ def test_loadavg_probe_shape():
     assert got is None or (
         len(got) == 3 and all(isinstance(x, float) for x in got)
     )
+
+
+def test_summary_line_is_compact_and_keyed():
+    """The summary is the LAST stdout line, and a caller that keeps only
+    a 2000-character tail must parse it whole: one line, exactly the
+    contract keys, well under the tail — even with wide values."""
+    line = bench.summary_line(
+        total=123456789.123, sf=1000.0, repeats=1000, n_queries=100000
+    )
+    assert "\n" not in line
+    assert len(line) < 2000
+    assert set(json.loads(line)) == {
+        "metric",
+        "value",
+        "unit",
+        "sf",
+        "repeats",
+        "n_queries",
+        "detail_file",
+    }

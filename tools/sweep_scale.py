@@ -14,11 +14,13 @@ can reproduce them (VERDICT r4 #3):
    uses (hadoop_lab_spark.testing.assert_matches_oracle). Rows-only
    queries run and must not error.
 2. Bench: per-lane noop-sink wall time (n=1 — at 10x data a single run
-   dominates noise), printed per lane and written to
-   /tmp/sweep_<sfname>.json with the sf0.1 round-of-record medians for
-   ratio computation when bench_detail.json is present.
+   dominates noise), printed per lane.
 
-Exit code 0 only if every differential matched.
+Both results go to /tmp/sweep_<sfname>.json: per lane, the differential
+status ("diff") and the wall seconds ("sec", null when the lane failed),
+plus the list of failed lanes.
+
+Exit code 0 only if every differential matched and every bench lane ran.
 """
 
 from __future__ import annotations
