@@ -7,20 +7,23 @@ value-hash → CORRECTNESS_r{N}.json).
 
 All real content lives in :mod:`hadoop_lab_spark.plans` — this module is
 a thin adapter over the query registry so the Spark implementation and
-its oracle can never drift apart.
+its oracle can never drift apart. It is also where the driver's session
+enters the engine, so it applies the engine confs (``tune_session``):
+the lanes set none.
 """
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
 import subprocess
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hadoop_lab_spark.plans.registry import REGISTRY, load_all_query_modules
+from hadoop_lab_spark.plans.registry import REGISTRY, QueryFn, load_all_query_modules
+from hadoop_lab_spark.session import tune_session
 
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
@@ -213,13 +216,19 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on sf0.001: case-sensitive word count over
     documents.text (the lab2 pipeline — scan → flatMap → agg)."""
     load_all_query_modules()
-    return REGISTRY["wordcount"].fn(spark, _SMOKE_SF_DIR)
+    return REGISTRY["wordcount"].fn(tune_session(spark), _SMOKE_SF_DIR)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def _tuned(fn: QueryFn) -> QueryFn:
+    """``fn`` on the driver's session, after the engine confs are set."""
+    return functools.wraps(fn)(lambda spark, sf_dir: fn(tune_session(spark), sf_dir))
+
+
+def queries() -> dict[str, QueryFn]:
     """One entry per implemented operator from SURVEY.md §2 (+ extensions),
-    emitted least-recently-driver-verified first (see _rotation_order)."""
-    return {name: REGISTRY[name].fn for name in _rotation_order()}
+    emitted least-recently-driver-verified first (see _rotation_order),
+    each tuning the session it is given."""
+    return {name: _tuned(REGISTRY[name].fn) for name in _rotation_order()}
 
 
 def oracle_sql() -> dict[str, str]:

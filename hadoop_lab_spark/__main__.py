@@ -106,10 +106,8 @@ def main(argv: list[str] | None = None) -> int:
             if args.output:
                 print(f"wrote reference-shaped output to {args.output}")
         elif args.cmd == "sql":
-            from hadoop_lab_spark.session import tune_session
             from hadoop_lab_spark.sources.tables import register_temp_views
 
-            tune_session(spark)
             register_temp_views(spark, args.sf_dir)
             spark.sql(args.statement).show(args.rows, truncate=False)
         else:

@@ -91,14 +91,6 @@ def word_shingle_arrays(
     return df.select(F.col(id_col), F.array_distinct(shingles).alias("sh_arr"))
 
 
-def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = SHINGLE_N) -> DataFrame:
-    """(id, shingle) pairs: the exploded form of
-    :func:`word_shingle_arrays`, for plans that join ON the shingle
-    (the exhaustive n-gram blocking join)."""
-    arr = word_shingle_arrays(df, id_col, text_col, n)
-    return arr.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
-
-
 def _band_signatures(
     doc_sets: DataFrame, id_col: str, seeds: int, bands: int
 ) -> DataFrame:
@@ -131,46 +123,6 @@ def _band_signatures(
         ]
     )
     return doc_sets.select(F.col(id_col), F.posexplode(band_sigs).alias("band", "band_sig"))
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = SHINGLE_N,
-    seeds: int = MINHASH_SEEDS,
-    bands: int = LSH_BANDS,
-) -> DataFrame:
-    """(id_a, id_b) candidate near-duplicate pairs: documents agreeing on
-    at least one full LSH band (id_a < id_b, distinct).
-
-    The self-join is keyed on (band, band_sig) — only documents whose
-    band signature collides ever meet, so the pair stage is linear in
-    collisions. With seeds=12, bands=4 (r=3), the match curve passes
-    ~50% at Jaccard ≈ 0.44.
-
-    The band table is pinned behind its own (band, band_sig) exchange —
-    see :func:`minhash_near_dups` for the measured rationale (the
-    self-join's two sides otherwise each re-run the 12-md5 signature
-    Generate above the doc-set exchange) and for why the self-join is a
-    sort-merge join at every size.
-    """
-    doc_sets = word_shingle_arrays(df, id_col, text_col, n)
-    bands_df = _band_signatures(doc_sets, id_col, seeds, bands).repartition(
-        F.col("band"), F.col("band_sig")
-    )
-    left = bands_df.select(
-        F.col(id_col).alias("id_a"), F.col("band"), F.col("band_sig")
-    )
-    right = bands_df.select(
-        F.col(id_col).alias("id_b"), F.col("band"), F.col("band_sig")
-    )
-    return (
-        left.join(right.hint("merge"), ["band", "band_sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 def exact_jaccard(

@@ -28,13 +28,7 @@ from hadoop_lab_spark.functions.numeric import (
     sql_exact_round_sum_fast,
 )
 from hadoop_lab_spark.plans.registry import register
-from hadoop_lab_spark.session import tune_session
 from hadoop_lab_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _scratch_tag(spark: SparkSession, sf_dir: str) -> str:
@@ -63,7 +57,7 @@ def _scratch_tag(spark: SparkSession, sf_dir: str) -> str:
     tags=("advanced", "asof", "join"),
 )
 def q_asof_purchase_last_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -106,7 +100,7 @@ _HEXPAIR = (
     tags=("advanced", "sampling", "aggregate"),
 )
 def q_sampled_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     sampled = deterministic_sample(orders, "o_orderkey", keep_buckets=64)
     return sampled.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -136,7 +130,7 @@ def q_salted_collect_types_per_user(spark: SparkSession, sf_dir: str) -> DataFra
     the hot-key bound silently degrades to |key|/5 (r4 skew-stress
     finding). event_id is row-unique → true |key|/buckets level-1 bound,
     asserted on a hostile fixture in tests/test_skew_stress.py."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return collect_per_group_salted(
         events, "user_id", "event_type", buckets=16, salt_on="event_id"
     )
@@ -185,7 +179,7 @@ def q_scalar_function_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     is IEEE correctly-rounded and therefore safe; ln/exp are NOT (libm
     vs JVM differ in the last ulp) and are deliberately excluded from
     the oracle-checked surface."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     d = F.col("o_orderdate")
     return o.select(
         "o_orderkey",
@@ -247,7 +241,7 @@ def q_scalar_function_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("advanced", "json", "aggregate"),
 )
 def q_json_extract_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     # try_cast, not cast: a non-integer k ('1.5', 'true', a nested
     # object) must become NULL, not crash the job under ANSI mode.
     k = F.get_json_object("props", "$.k").try_cast("int")
@@ -285,7 +279,7 @@ def q_approx_distinct_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero — a DIVIDE_BY_ZERO job-killer under ANSI (the corr() class
     from the adversarial-corpus round). The contract for such groups
     is approx == 0 (an empty HLL must report nothing)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     agg = orders.groupBy("o_orderpriority").agg(
         F.count_distinct("o_custkey").alias("exact_uniq"),
         F.approx_count_distinct("o_custkey", rsd=0.02).alias("_approx"),
@@ -345,7 +339,7 @@ def q_scalar_function_sampler2(spark: SparkSession, sf_dir: str) -> DataFrame:
     float policy needed (greatest/least select, never accumulate).
     DuckDB unwraps its map access with [1] because map extraction yields
     a list there; Spark map access is already scalar."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     et = F.col("event_type")
     return e.select(
         "event_id",
@@ -399,7 +393,7 @@ def q_partitioned_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     The demo writes the partitioned layout to scratch space each run —
     the write is part of the measured operator (a real pipeline pays it
     once at ingest)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     sf_tag = _scratch_tag(spark, sf_dir)
     out = os.path.join(tempfile.gettempdir(), f"hls_partition_demo_{sf_tag}")
     orders.write.partitionBy("o_orderpriority").mode("overwrite").parquet(out)
@@ -458,7 +452,7 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, proving result equality. NaN values excluded on both engines
     (see oracle comment)."""
     buckets = 16
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNull() | ~F.isnan("value")
     )
     dim = e.groupBy("event_type").agg(
@@ -508,7 +502,7 @@ def q_approx_percentile_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a KLL-style mergeable sketch) is one pass + tiny state per group;
     the exact interpolated percentile is a full sort per group — the
     exact side is here AS the contract, production ships the sketch."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, 0.5)").alias("_exact"),
         F.expr("approx_percentile(l_extendedprice, 0.5, 10000)").alias("_approx"),
@@ -551,7 +545,7 @@ def q_orc_roundtrip_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pushdown/pruning machinery as parquet in Spark's DSv1 path.
     The oracle aggregates the ORIGINAL parquet, so any round-trip value
     corruption (type coercion, precision loss) fails the hash gate."""
-    sup = _t(spark, sf_dir, "supplier")
+    sup = load_table(spark, sf_dir, "supplier")
     sf_tag = _scratch_tag(spark, sf_dir)
     out = os.path.join(tempfile.gettempdir(), f"hls_orc_demo_{sf_tag}")
     sup.write.mode("overwrite").orc(out)
@@ -605,7 +599,7 @@ def q_range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no band in the theta form) AND the overflow guard: without it a
     # value like 1e12 makes floor()/cast blow past INT under ANSI mode.
     # It also prunes the fact scan before the join instead of after.
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         ~F.isnan("value")
         & (F.col("value") >= 0.0)
         & (F.col("value") < width * nbands)
@@ -644,8 +638,8 @@ def q_csv_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra full pass over the data). CSV is the interchange format every
     ingest pipeline meets; the oracle aggregating the ORIGINAL parquet
     catches any type coercion the text hop introduces."""
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     sf_tag = _scratch_tag(spark, sf_dir)
     out = os.path.join(tempfile.gettempdir(), f"hls_csv_demo_{sf_tag}")
     nation.write.mode("overwrite").option("header", True).csv(out)
@@ -683,7 +677,7 @@ def q_json_roundtrip_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame
     make the fidelity check non-trivial: the write serializes ISO-8601
     with microseconds, the schema'd read parses them back; a lossy hop
     (second truncation, timezone shift) would change the daily sums."""
-    e = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     sf_tag = _scratch_tag(spark, sf_dir)
     out = os.path.join(tempfile.gettempdir(), f"hls_json_demo_{sf_tag}")
     e.select("event_id", "ts", "value").write.mode("overwrite").json(out)
@@ -726,9 +720,8 @@ def q_bucketed_join_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_shapes.py: no Exchange below the join."""
     from hadoop_lab_spark.sources.bucketing import read_table, write_bucketed
 
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     sf_tag = _scratch_tag(spark, sf_dir)
     base = os.path.join(tempfile.gettempdir(), f"hls_bucketed_{sf_tag}")
     t_o, t_l = f"hls_b_orders_{sf_tag}", f"hls_b_lines_{sf_tag}"
@@ -777,7 +770,7 @@ def q_orders_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     an aggregated-away dimension; both engines use the same bitmask
     convention (leftmost column = MSB). One Expand + one aggregate —
     the |sets|× row expansion happens map-side, pre-shuffle."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupingSets(
             [["o_orderstatus"], ["o_orderpriority"], []],
@@ -827,7 +820,7 @@ def q_null_semantics_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL in every group on both engines — round(NULL) must propagate,
     not zero-fill. NaN rows are excluded on both engines (this pins
     three-valued NULL logic, not NaN comparison policy)."""
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNull() | ~F.isnan("value")
     )
     highs = F.when(F.col("value") >= 50, F.col("value"))
@@ -881,7 +874,7 @@ def q_daily_revenue_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     row (sequence + explode) — never a driver-side loop; the left join
     broadcasts the spine. Zero-filling happens AFTER the rounded
     aggregate, so the float policy is untouched."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     bounds = e.agg(
         F.min(F.date_trunc("day", "ts").cast("date")).alias("lo"),
         F.max(F.date_trunc("day", "ts").cast("date")).alias("hi"),
@@ -962,7 +955,7 @@ def q_stats_aggregate_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation ulp (verified empirically: 1.9348 vs 1.9362 on the same
     group), same exclusion class as ln/exp. NaN samples excluded on both
     engines (see oracle comment)."""
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNull() | ~F.isnan("value")
     )
     u = F.col("user_id").cast("double")
@@ -1038,7 +1031,7 @@ def q_array_lambda_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the driver's pandas canonicalizer (unhashable ndarray — the
     one red row of round 2), and integer rendering is engine-independent
     where float-to-string formatting is not."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     from hadoop_lab_spark.functions.text import trunc as t6  # magnitude-guarded
 
     x2d = lambda x: x.cast("double")  # noqa: E731
@@ -1105,7 +1098,7 @@ def q_compaction_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     file count in tests and by the oracle hash for value fidelity. At
     100 TB this runs per-partition-directory with target size
     ~files·128 MB, exactly this plan."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     sf_tag = _scratch_tag(spark, sf_dir)
     frag = os.path.join(tempfile.gettempdir(), f"hls_frag_{sf_tag}")
     compact = os.path.join(tempfile.gettempdir(), f"hls_compact_{sf_tag}")
@@ -1166,7 +1159,7 @@ def q_from_json_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked: Spark's Jackson accepts trailing garbage that
     DuckDB's json_valid rejects (verified empirically), so the
     cross-engine contract covers valid JSON only."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     parsed = F.from_json(F.col("props"), "struct<k:int, absent:string>")
     return (
         events.filter(F.col("event_type") == "purchase")
@@ -1217,7 +1210,7 @@ def q_map_function_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops the 1-char status value (length > 1 predicate) — the oracle
     states the surviving entry literally, so a semantics drift in
     map_filter/map_concat breaks the hash."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     base = F.create_map(
         F.lit("status"), F.col("o_orderstatus"), F.lit("prio"), F.col("o_orderpriority")
     )
@@ -1293,7 +1286,7 @@ def q_string_distance_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance contract is scoped to printable-ASCII pairs (NULL
     otherwise): the engines disagree on the distance UNIT for
     multi-byte text (codepoints vs bytes — see oracle comment)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
 
     def _ascii(c: str):
         return F.col(c).rlike("^[ -~]*$")
@@ -1346,7 +1339,7 @@ def q_conditional_agg_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     the combiner effect is preserved — no second pass, no subquery per
     condition. Money sum rounds 2dp per float policy; booleans and
     counts are exact."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count_if(F.col("o_orderstatus") == "F").cast("bigint").alias("n_fulfilled"),
         exact_round_sum_fast(F.when(F.col("o_orderstatus") == "O", F.col("o_totalprice"))).alias("open_revenue"),
@@ -1382,7 +1375,7 @@ def q_regexp_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookaround/backreferences (Java-only) and stay in the common
     Java/RE2 dialect; Spark regexp_replace is global by default where
     DuckDB needs the explicit 'g' flag (float-policy doc, r1)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = F.col("text")
     return d.select(
         "doc_id",
@@ -1434,7 +1427,7 @@ def q_array_setops_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-valued result is array_sort'ed before rendering so the oracle
     compares sets, not engine-internal orderings. Scan-local, no
     shuffle. list_position/array_position agree on 1-based-with-0-miss."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     head = F.slice(F.split(F.trim(F.col("text")), r"[ \t\n\r\f]+"), 1, 6)
     kw = F.array(*[F.lit(w) for w in ("data", "query", "table", "row", "join")])
     # NULL-text policy (pinned by tests/test_adversarial_corpus.py):
@@ -1486,7 +1479,7 @@ def q_exact_percentiles_per_priority(spark: SparkSession, sf_dir: str) -> DataFr
     group; at 100 TB prefer approx_percentile (one-pass sketch) unless
     exactness is contractual — that trade is exactly why both queries
     exist."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     q1 = F.percentile("o_totalprice", F.lit(0.25))
     q3 = F.percentile("o_totalprice", F.lit(0.75))
     return o.groupBy("o_orderpriority").agg(

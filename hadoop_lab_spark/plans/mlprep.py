@@ -24,7 +24,6 @@ from hadoop_lab_spark.functions.numeric import (
     sql_exact_round_sum_fast,
 )
 from hadoop_lab_spark.plans.registry import register
-from hadoop_lab_spark.session import tune_session
 from hadoop_lab_spark.sources import load_table
 
 _TOKS = f"regexp_split_to_array(trim(text), '{X.WS_RE}')"
@@ -37,11 +36,6 @@ CHUNK_WINDOW = 200  # chars per chunk
 CHUNK_STRIDE = 150  # window - stride = 50 chars overlap
 PACK_BUDGET = 512  # tokens per pack
 PACK_BUCKETS = 32  # parallel packing lanes
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +66,7 @@ def q_chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs are filtered on BOTH sides first — Spark's sequence(0,-1)
     counts backwards while DuckDB's generate_series is empty, the
     total-expression trap in tests/test_properties.py)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     offs = F.sequence(
         F.lit(0),
         F.greatest(F.col("n_chars") - 1, F.lit(0)).cast("bigint"),
@@ -125,7 +119,7 @@ def q_pack_documents_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chunk_documents_overlap)."""
     from pyspark.sql.window import Window
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         (F.col("doc_id") % PACK_BUCKETS).alias("bucket"),
         X.token_count("text").alias("n_tokens"),
@@ -184,7 +178,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     no rounding policy is needed. Ties break on the token string."""
     from pyspark.sql.window import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
         .filter(F.col("tok") != "")
@@ -255,7 +249,7 @@ def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     write time and the join is shuffle-free. The simulated update adds
     an EXACT 10.0 (single IEEE add — engine-identical); the delta sum
     stays cent-exact, so round(·, 2) is hash-safe per float policy."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     v1 = o.filter(F.col("o_orderkey") % 10 != 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -326,7 +320,7 @@ def q_upsert_orders_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioning note as snapshot_diff applies; on a real lakehouse
     table this becomes a partition-pruned rewrite of only the
     partitions holding matched keys."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     base = o.filter(F.col("o_orderkey") % 10 != 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -367,7 +361,7 @@ def q_unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's unpivot is a Generate (row fan-out ×2) in the scan stage —
     no shuffle, columnar input, value columns cast to one type up
     front as unpivot requires."""
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_size").cast("double").alias("p_size"),
         "p_retailprice",
@@ -407,7 +401,7 @@ def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_chars is ONE int/int double division (exact per float policy),
     computed explicitly instead of avg() — DuckDB's avg accumulates
     doubles incrementally, which is not bit-stable cross-engine."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     b = hash_bucket("doc_id", 256)
     split = (
         F.when(b < 204, "train").when(b < 230, "val").otherwise("test")
@@ -452,7 +446,7 @@ def q_corpus_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's quantile_cont: both sort bigints and interpolate the
     midpoint as one double division, so the result is bit-stable.
     avg_chars is ONE int/int division (see train_val_test_split)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     agg = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.countDistinct("lang").cast("bigint").alias("n_langs"),
@@ -509,7 +503,7 @@ DECON_PROBE_MOD = 101  # doc_id % MOD == 0 ⇒ benchmark/probe doc
     tags=("mlprep", "dedup", "text", "join"),
 )
 def q_decontamination_8gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shared_probe_ngrams(_t(spark, sf_dir, "documents"))
+    return shared_probe_ngrams(load_table(spark, sf_dir, "documents"))
 
 
 def shared_probe_ngrams(
@@ -596,7 +590,7 @@ def shared_probe_ngrams(
     tags=("mlprep", "vector", "transform"),
 )
 def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return int8_quantize_audit(_t(spark, sf_dir, "embeddings"))
+    return int8_quantize_audit(load_table(spark, sf_dir, "embeddings"))
 
 
 def int8_quantize_audit(vectors: DataFrame) -> DataFrame:
@@ -677,7 +671,7 @@ def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram is total over non-NULL, non-NaN prices (ADVICE r3:
     Spark FLOOR maps NaN into bin 0 while DuckDB's CAST(NaN AS BIGINT)
     raises — NaN is excluded on both engines, not binned)."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull() & ~F.isnan("o_totalprice")
     )
     raw = F.floor(
@@ -726,7 +720,7 @@ def q_feature_standardize_lineitem(spark: SparkSession, sf_dir: str) -> DataFram
     z magnitudes stay single-digit). Degenerate sigma (single-row or
     constant group → NULL/0/NaN) yields NULL, single-eval via nanvl +
     try_divide."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     stats = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
         F.avg("l_extendedprice").alias("mu"),
         F.stddev_samp("l_extendedprice").alias("sigma"),
@@ -780,7 +774,7 @@ def q_corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     count(DISTINCT) ignores NULLs identically; the token total skips
     empty/NULL docs explicitly on both sides because DuckDB's split of
     '' yields [''] (len 1) while the convention counts zero tokens."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok_n = F.when(
         F.col("text").isNull() | (F.trim("text") == ""), F.lit(0)
     ).otherwise(X.token_count("text"))
@@ -831,7 +825,7 @@ def q_orders_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     with snapshot timestamps as versions."""
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     base = o.filter(F.col("o_orderkey") % 10 != 0).select(
         "o_orderkey", "o_totalprice", F.lit(1).cast("int").alias("version")
     )
@@ -904,7 +898,7 @@ def q_embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_vecs too) — without this, Spark's `a + x*x` fold NULL-poisons
     the whole norm while DuckDB's list_aggregate('sum') skips NULLs,
     a silent cross-engine divergence."""
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     clean = F.filter(F.col("embedding"), lambda x: x.isNotNull())
     e = e.select("label", clean.alias("emb")).filter(F.size("emb") > 0)
     l2 = F.sqrt(
@@ -963,7 +957,7 @@ def q_language_rebalance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     per_lang = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("lang").isNotNull())
         .groupBy("lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))

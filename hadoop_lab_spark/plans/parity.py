@@ -25,13 +25,7 @@ from hadoop_lab_spark.operators import (
     wordcount,
 )
 from hadoop_lab_spark.plans.registry import register
-from hadoop_lab_spark.session import tune_session
 from hadoop_lab_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -54,7 +48,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan reads only `text`; explode → partial count → one shuffle of
     (word, partial) pairs → final count. lab2's combiner is implicit."""
-    return wordcount(_t(spark, sf_dir, "documents"), "text")
+    return wordcount(load_table(spark, sf_dir, "documents"), "text")
 
 
 # ---------------------------------------------------------------------------
@@ -74,7 +68,7 @@ def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_max_price_per_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAX is order-insensitive — no rounding needed. Scan reads 2 of 11
     columns; shuffle carries one (year, partial-max) row per partition."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     li = li.select(F.year("l_shipdate").alias("ship_year"), "l_extendedprice")
     return max_per_group(li, "ship_year", "l_extendedprice", out="max_price")
 
@@ -98,7 +92,7 @@ def q_max_price_per_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_grade_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure row transform — stays in one codegen stage, zero shuffles."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     boundaries = tuple((t * 100, g) for t, g in ((90, "A"), (80, "B"), (70, "C"), (60, "D")))
     return cust.select("c_custkey", bucketize("c_acctbal", boundaries).alias("grade"))
 
@@ -131,7 +125,7 @@ def q_grade_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grades_collect_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lab4's reducer concatenates subject:grade pairs per student
     (`lab4/StudentGrades.sh:107-120`); elements sorted per SURVEY §2.10.8."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     boundaries = tuple((t * 100, g) for t, g in ((90, "A"), (80, "B"), (70, "C"), (60, "D")))
     entry = F.concat(F.col("c_name"), F.lit(":"), bucketize("c_acctbal", boundaries))
     return collect_per_group(
@@ -178,7 +172,7 @@ def q_matmul_coo(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference hardcodes K=2 (`lab5:86,106`) and replicates rows K times
     through the shuffle; this plan shuffles each cell once and Catalyst
     broadcasts the small side."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cells = emb.select(
         "vec_id",
         F.posexplode("embedding").alias("pos", "val"),
@@ -226,7 +220,7 @@ def q_row_greatest_max_per_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapper computing the row max before the shuffle (`lab6:90-98`), so the
     shuffle carries one double per row, not the wide row. Scalar double
     math is IEEE-identical across engines — no rounding needed."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     metric = row_greatest(
         F.col("l_quantity"), F.col("l_extendedprice") / 1000, F.col("l_tax") * 100
     )
@@ -250,7 +244,7 @@ def q_row_greatest_max_per_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "lab7", "transform"),
 )
 def q_classify_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     per_day = max_per_group(
         events.select(F.to_date("ts").alias("day"), "value"), "day", "value", out="mx"
     )
@@ -274,7 +268,7 @@ def q_classify_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "lab8", "lab10", "aggregate"),
 )
 def q_count_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return count_per_group(_t(spark, sf_dir, "orders"), "o_orderpriority")
+    return count_per_group(load_table(spark, sf_dir, "orders"), "o_orderpriority")
 
 
 @register(
@@ -288,7 +282,7 @@ def q_count_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "lab8", "lab10", "aggregate"),
 )
 def q_count_per_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return count_per_group(_t(spark, sf_dir, "events"), "event_type")
+    return count_per_group(load_table(spark, sf_dir, "events"), "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -307,7 +301,7 @@ def q_count_per_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "lab9", "aggregate", "collect"),
 )
 def q_collect_types_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return collect_per_group(events, "user_id", "event_type")
 
 
@@ -352,7 +346,7 @@ def q_argmax_type_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single hash aggregate via min_by over (−value, witness) — no window
     sort; the reference needs a full reducer with a running max
     (`lab11:94-112`)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     rows = events.select(F.to_date("ts").alias("day"), "value", "event_type").filter(
         # NULL/NaN measures and NULL witnesses excluded by policy — see
         # oracle comment

@@ -31,13 +31,7 @@ from hadoop_lab_spark.functions import similarity as S
 from hadoop_lab_spark.functions import sketch as K
 from hadoop_lab_spark.functions import text as X
 from hadoop_lab_spark.plans.registry import register
-from hadoop_lab_spark.session import tune_session
 from hadoop_lab_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _sql_list(items: tuple[str, ...]) -> str:
@@ -70,7 +64,7 @@ _TOKS = f"regexp_split_to_array(trim(text), '{X.WS_RE}')"
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One codegen stage over the scan, zero shuffles — at 100 TB this is
     a single pass that reads only (doc_id, text)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         X.token_count("text").alias("n_tokens"),
@@ -104,7 +98,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "text"),
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", X.quality_score("text").alias("quality"))
 
 
@@ -139,7 +133,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "text"),
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", X.lang_id("text").alias("lang_pred"))
 
 
@@ -158,7 +152,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "text", "dedup"),
 )
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         X.fingerprint_md5("text").alias("fp_canon"),
@@ -184,7 +178,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-side partial agg on the fingerprint → one shuffle keyed on a
     uniform hash: perfectly balanced at any scale."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", X.fingerprint_md5("text").alias("fp"))
         .groupBy("fp")
@@ -260,7 +254,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate generation is the band-signature self-join — cost scales
     with collisions, never n². See functions/dedup.py for the 100 TB
     analysis (hot-key caps, bounded ×seeds blowup)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     out = D.minhash_near_dups(docs, "doc_id", "text", MINHASH_THRESHOLD)
     return out.select("id_a", "id_b", "jaccard")
 
@@ -301,7 +295,7 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     base band signatures are a maintained index table and only the
     delta-sized probe side is computed per batch. See
     functions/dedup.py:minhash_incremental_dups for the scale analysis."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     delta = docs.filter(F.col("doc_id") % 5 == 0)
     base = docs.filter(F.col("doc_id") % 5 != 0)
     return D.minhash_incremental_dups(base, delta, "doc_id", "text", MINHASH_THRESHOLD)
@@ -368,7 +362,7 @@ def q_dedup_ingest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_lab_spark.checkpoint import tracked_checkpoint, unpersist_rdds
     from hadoop_lab_spark.operators.graph import connected_components
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     delta = docs.filter(F.col("doc_id") % 5 == 0)
     base = docs.filter(F.col("doc_id") % 5 != 0)
     # The verified pair list is consumed twice (node list + CC's edge
@@ -433,7 +427,7 @@ def q_dedup_ingest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "dedup"),
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     out = D.ngram_jaccard_pairs(docs, "doc_id", "text", NGRAM_THRESHOLD)
     return out.select("id_a", "id_b", "jaccard")
 
@@ -468,7 +462,7 @@ _SIMHASH_SQL = f"""
     tags=("pipeline", "dedup", "simhash"),
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return D.simhash_bits(docs, "doc_id", "text")
 
 
@@ -513,7 +507,7 @@ _SIMHASH_PER_CHUNK = D.SIMHASH_BITS // D.SIMHASH_CHUNKS
     tags=("pipeline", "dedup", "simhash"),
 )
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return D.simhash_near_dups(docs, "doc_id", "text", SIMHASH_HAMMING_MAX)
 
 
@@ -559,7 +553,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixpoint is unique, so both engines agree exactly."""
     from hadoop_lab_spark.operators.graph import connected_components
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_near_dups(docs, "doc_id", "text", MINHASH_THRESHOLD).select(
         "id_a", "id_b"
     )
@@ -612,7 +606,7 @@ def _emb_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table under the similarity contract (see
     _EMB_CLEAN_SQL): NULL vectors and vectors containing NULL elements
     dropped. Scan-local array predicate — no shuffle added."""
-    return _t(spark, sf_dir, "embeddings").filter(
+    return load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
         & ~F.exists("embedding", lambda x: x.isNull())
     )
@@ -872,7 +866,7 @@ def q_dedup_embedding_cosine_adaptive(spark: SparkSession, sf_dir: str) -> DataF
     # would force a full scan of the array column just to size a knob
     # that only needs order-of-magnitude n. Mirrored by the oracle's
     # prm CTE counting the raw table.
-    planes = adaptive_planes(_t(spark, sf_dir, "embeddings").count())
+    planes = adaptive_planes(load_table(spark, sf_dir, "embeddings").count())
     out = S.cosine_near_dup_pairs(
         emb,
         COSINE_DUP_THRESHOLD,
@@ -1031,7 +1025,7 @@ def q_multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Arrow/pandas path works and is oracle-checked bit-for-bit. At
     100 TB the same shape handles real codecs (one Python worker per
     partition, columnar transfer, no per-row pickling)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     with_payload = docs.select(
         "doc_id", M.payload_from_text("text").alias("payload")
     )
@@ -1065,7 +1059,7 @@ def q_multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "multimodal", "pandas"),
 )
 def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     with_payload = docs.select(
         "doc_id", M.payload_from_text("text").alias("payload")
     )
@@ -1110,7 +1104,7 @@ def q_multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte arithmetic so the oracle is exact with no float policy. The
     ASCII restriction exists for the ORACLE's ord()==byte equivalence
     only — the operator itself meters raw bytes for any payload."""
-    docs = _t(spark, sf_dir, "documents").filter(
+    docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
         & (F.octet_length("text") == F.length("text"))
     )
@@ -1146,7 +1140,7 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     over collected arrays per group — concentrates whole groups on
     single tasks). Mean is fold-accumulated float → 6dp truncation on
     both sides (cross-engine float policy)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cells = emb.select("label", F.posexplode("embedding").alias("pos", "v"))
     return cells.groupBy("label", "pos").agg(
         X.trunc(F.avg("v"), 6).alias("centroid_v")
@@ -1202,7 +1196,7 @@ def q_inverted_index_rare_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rare-token join, and the postings collect all reuse ONE
     exchange (the CMS ReusedExchange pattern, functions/sketch.py) —
     the cap costs no extra scan or shuffle of the token stream."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = (
         docs.select(
             "doc_id",
@@ -1305,7 +1299,7 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact tf table exists here as the verification contract — a
     production run at scale ships only the sketch. CMS guarantees
     est_cnt >= exact_cnt, property-tested in tests/test_sketch.py."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tf = K.token_frequencies(docs, "text")
     est = K.cms_estimates(tf)  # carries (tok, c, est) in one aggregate
     # orderBy+limit compiles to TakeOrderedAndProject (per-partition
@@ -1365,7 +1359,7 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by (doc_id, bigram): per-doc cardinality bounds every group,
     so there is no hot key at any corpus size; the distinct-count side
     is scan-local array math (zero extra shuffles)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim("text"), X.WS_RE)
     stats = docs.select(
         "doc_id",
@@ -1443,7 +1437,7 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd projection — zero shuffles, trivially linear at any scale.
     DuckDB's regexp_replace needs the 'g' flag to match Spark's
     replace-all default (registry header gotcha)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     aug = F.concat(
         F.when(
             F.col("doc_id") % 3 == 0,
@@ -1511,7 +1505,7 @@ def q_bigram_lm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     then TakeOrderedAndProject for the top-30; the final row_number runs
     over 30 rows. p_cond is a single int/int division — bit-exact, no
     rounding (registry float policy)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim("text"), X.WS_RE)
     n = F.size(toks)
     pairs = F.zip_with(
@@ -1626,7 +1620,7 @@ def q_user_longest_increasing_run(spark: SparkSession, sf_dir: str) -> DataFrame
             }
         )
 
-    events = _t(spark, sf_dir, "events").filter(
+    events = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
         & F.col("value").isNotNull()
         & ~F.isnan("value")
@@ -1662,7 +1656,7 @@ def q_user_longest_increasing_run_window(spark: SparkSession, sf_dir: str) -> Da
     cannot be part of a stable run contract)."""
     from pyspark.sql import Window
 
-    events = _t(spark, sf_dir, "events").filter(
+    events = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
         & F.col("value").isNotNull()
         & ~F.isnan("value")
@@ -1720,7 +1714,7 @@ def q_multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1→1 Arrow-batched shape like feature extraction; NULL payloads
     yield NULL dims (null-propagation, not a crash). All-integer
     planning keeps the oracle exact with no float policy."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     with_payload = docs.select(
         "doc_id", M.payload_from_text("text").alias("payload")
     )

@@ -24,13 +24,7 @@ from hadoop_lab_spark.functions.numeric import (
     sql_exact_round_sum_fast,
 )
 from hadoop_lab_spark.plans.registry import register
-from hadoop_lab_spark.session import tune_session
 from hadoop_lab_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _revenue():
@@ -73,7 +67,9 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a LONG→DECIMAL repack, keeping exact integer accumulation — the
     r6 layout-invariance contract — at about half the cost. Values are
     bit-identical to exact_round_sum for money-like columns."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp")
+    )
     disc_price = _revenue()
     charge = disc_price * (1 + F.col("l_tax"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
@@ -112,11 +108,11 @@ def q_revenue_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes customers before the only big shuffle (lineitem⋈orders).
     At 100 TB this is one sort-merge/shuffled-hash join on orderkey plus
     broadcast hash joins — no dim ever shuffles."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
 
     cust_nation = (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -160,8 +156,8 @@ def q_top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort+limit compiles to TakeOrderedAndProject — each partition
     keeps its local top-10, the driver merges k·partitions rows; no
     global sort materializes."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     rev = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(F.col("o_custkey").alias("c_custkey"))
@@ -191,7 +187,7 @@ def q_top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window"),
 )
 def q_top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     win = Window.partitionBy("p_brand").orderBy(
         F.col("p_retailprice").desc(), F.col("p_partkey").asc()
     )
@@ -240,7 +236,7 @@ def q_cumulative_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the physical input (inline VALUES honor it; a table scan can land
     the NULL row mid-sequence), so a NULL month cannot be part of a
     stable cross-engine contract at all."""
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
     monthly = orders.groupBy(F.date_trunc("month", "o_orderdate").alias("month")).agg(
         exact_round_sum_fast("o_totalprice").alias("monthly")
     )
@@ -266,7 +262,7 @@ def q_cumulative_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "aggregate", "distinct"),
 )
 def q_distinct_customers_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -295,9 +291,9 @@ def q_customers_without_urgent_orders(spark: SparkSession, sf_dir: str) -> DataF
     parts_shipped_semi, r4 scale sweep): NOT EXISTS only needs the key
     set, and distinct(o_custkey) is bounded by |customer| at any order
     volume — the raw filtered-fact projection is not."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     urgent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
         .distinct()
@@ -330,8 +326,8 @@ def q_parts_shipped_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1 GiB driver; at 100 TB it would be fatal). The distinct is one
     map-side-combined shuffle of ≤|part| rows, and it also gives the
     planner an honest size estimate for the broadcast decision."""
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey").distinct()
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey").distinct()
     return (
         part.join(li, part.p_partkey == li.l_partkey, "left_semi")
         .groupBy("p_brand")
@@ -353,8 +349,8 @@ def q_parts_shipped_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "join", "outer"),
 )
 def q_nation_customer_counts_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     joined = nation.join(cust, cust.c_nationkey == nation.n_nationkey, "left")
     return joined.groupBy("n_name").agg(F.count("c_custkey").alias("n_customers"))
 
@@ -375,7 +371,7 @@ def q_nation_customer_counts_outer(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("extension", "setop"),
 )
 def q_fulfilled_and_pending_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     f_set = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     p_set = orders.filter(F.col("o_orderstatus") == "P").select("o_custkey")
     return f_set.intersect(p_set).agg(F.count(F.lit(1)).alias("cnt"))
@@ -394,7 +390,7 @@ def q_fulfilled_and_pending_customers(spark: SparkSession, sf_dir: str) -> DataF
     tags=("extension", "setop"),
 )
 def q_only_fulfilled_customers_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     f_set = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     other = orders.filter(F.col("o_orderstatus") != "F").select("o_custkey")
     # subtract == EXCEPT (set semantics); exceptAll would be EXCEPT ALL.
@@ -417,7 +413,7 @@ def q_only_fulfilled_customers_except(spark: SparkSession, sf_dir: str) -> DataF
     tags=("extension", "rollup"),
 )
 def q_orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("cnt"),
         exact_round_sum_fast("o_totalprice").alias("total"),
@@ -445,7 +441,7 @@ def q_orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "aggregate", "percentile"),
 )
 def q_value_quartiles_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events").filter(
+    events = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNull() | ~F.isnan("value")
     )
     return events.groupBy("event_type").agg(
@@ -488,7 +484,7 @@ def q_sessions_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (ADVICE-r3 class): an undated event has no position in an
     inactivity-gap timeline, and NULL window sort keys order
     differently across engines."""
-    events = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    events = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     win = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(win))
     new_session = F.when(gap.isNull() | (gap > 3600), 1).otherwise(0)
@@ -515,7 +511,7 @@ def q_sessions_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "grouping-sets"),
 )
 def q_orders_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -542,7 +538,7 @@ def q_orders_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pivot_revenue_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot values are declared explicitly — at 100 TB an implicit pivot
     needs an extra distinct pass to discover columns."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     out = (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -570,10 +566,10 @@ def q_pivot_revenue_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "set-op"),
 )
 def q_union_all_key_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.lit("order").alias("src"), F.col("o_custkey").alias("k")
     )
-    lines = _t(spark, sf_dir, "lineitem").select(
+    lines = load_table(spark, sf_dir, "lineitem").select(
         F.lit("lineitem").alias("src"), F.col("l_orderkey").alias("k")
     )
     return (
@@ -611,7 +607,7 @@ def q_union_all_key_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "window"),
 )
 def q_event_value_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     # value as the last key makes the order total (see oracle comment);
     # Spark ASC is NULLS FIRST by default on all three.
     win = Window.partitionBy("user_id").orderBy(
@@ -647,7 +643,7 @@ def q_event_value_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "window", "frame"),
 )
 def q_moving_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum("o_totalprice").alias("rev")
     )
@@ -674,7 +670,7 @@ def q_moving_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "subquery"),
 )
 def q_customers_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     nation_avg = cust.groupBy("c_nationkey").agg(F.avg("c_acctbal").alias("_avg"))
     return (
         cust.join(F.broadcast(nation_avg), "c_nationkey")
@@ -704,7 +700,7 @@ def q_orders_page2_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global sort + limit plans as TakeOrderedAndProject: each partition
     contributes its local top-(offset+limit), the driver merges — no full
     range-partitioned sort of the table."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select(
             "o_orderkey", F.round("o_totalprice", 2).alias("price")
@@ -754,7 +750,7 @@ def q_order_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique key, so every rank is deterministic, and percent_rank /
     cume_dist are integer ratios evaluated in one IEEE division —
     bit-identical across engines with no rounding policy."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").asc_nulls_first(),
         F.col("o_orderkey").asc_nulls_first(),
@@ -803,9 +799,9 @@ def q_building_unshipped_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the driver — no global sort). Tie-break on the unique order key
     keeps LIMIT membership deterministic across engines."""
     cutoff = "1998-06-01"
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     # filtered customers are still |customer|/|segments| — unhinted
     # (r4 audit), the planner broadcasts while small
@@ -849,7 +845,7 @@ def q_signup_purchase_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pushed-down slice, and both shuffles key on the uniform user_id.
     At 100 TB the signup side is a tiny fraction of events; AQE
     broadcasts it when below threshold."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     signups = (
         events.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
@@ -894,8 +890,8 @@ def q_custorder_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders per customer| — tiny at any scale, AQE coalesces it. count()
     over the right side's key counts 0 for unmatched customers exactly
     like SQL COUNT(col)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -933,7 +929,7 @@ def q_range_frame_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded at any SF — same justification as the cumulative/moving
     windows). Money sums round to 2dp (cent-exact inputs, registry
     policy)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum("o_totalprice").alias("rev")
     )
@@ -977,8 +973,8 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     double sum's last ulp moved with scan-split layout (caught by
     tests/test_input_layout.py at sf0.001), so the rounded answer was
     layout-dependent."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate").isNotNull())
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate").isNotNull())
+    part = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     # part scales with SF (it's a TPC-H scaled table, not a fixed dim)
     # — unhinted (r4 audit), the planner broadcasts while it fits
@@ -1045,11 +1041,11 @@ def q_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     small; the fact side never shuffles more than once per edge. At
     100 TB you'd run edges in one job exactly like this union does —
     shared scans, no driver loop."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    c = _t(spark, sf_dir, "customer")
-    p = _t(spark, sf_dir, "part")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer")
+    p = load_table(spark, sf_dir, "part")
+    n = load_table(spark, sf_dir, "nation")
 
     def audit(fact: DataFrame, fk: str, dim: DataFrame, pk: str, edge: str) -> DataFrame:
         joined = fact.select(fk).join(
@@ -1111,7 +1107,7 @@ def q_priority_multiset_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregates to (key, count) so the oracle comparison is
     multiplicity-exact without carrying duplicate rows through the
     driver hash."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     f_side = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     u_side = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     ia = (
@@ -1159,7 +1155,7 @@ def q_order_priority_tokens_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     for empty inputs). At 100 TB the preserved rows are what lets a
     downstream anti-join find records whose array column was empty —
     with plain explode they vanish from the pipeline silently."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     toks = F.when(
         F.col("o_orderpriority").isNull()
         | (F.trim("o_orderpriority") == ""),
@@ -1210,7 +1206,7 @@ def q_customer_name_fuzzy_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join shuffles on the block key (uniform by construction
     here; salt hot blocks in the wild). Output is per-block aggregates,
     so result size ∝ blocks, not pairs."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
     blk = F.substring(
         F.col("c_name"), 1, F.greatest(F.length("c_name") - 2, F.lit(1))
     )
@@ -1296,7 +1292,7 @@ def q_customer_name_fuzzy_blocks_fine(spark: SparkSession, sf_dir: str) -> DataF
     tail instead. Both passes ride ONE self-join: variants are exploded
     (2 rows/name), the join shuffles on the variant key (uniform even
     under hot stems), and distinct dedups pairs caught by both passes."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
     stem = F.substring(
         F.col("c_name"), 1, F.greatest(F.length("c_name") - 2, F.lit(1))
     )
@@ -1391,7 +1387,7 @@ def q_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative_monthly_revenue."""
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     first_seen = e.groupBy("user_id").agg(
@@ -1446,7 +1442,7 @@ def q_user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — either way no stage ever holds more than a month-pair count.
     NULL ts is excluded on both engines (ADVICE r3): an all-NULL-ts
     user must not mint a NULL cohort."""
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     month = F.date_trunc("month", "ts")

@@ -53,13 +53,7 @@ from hadoop_lab_spark.functions.numeric import (
     sql_exact_round_sum_fast,
 )
 from hadoop_lab_spark.plans.registry import register
-from hadoop_lab_spark.session import tune_session
 from hadoop_lab_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -152,7 +146,7 @@ def q_pagerank_event_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side scalar (fixed K, no convergence collect). See
     operators/graph.py:pagerank for the full plan argument.
     """
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     w = Window.partitionBy("event_type", F.to_date("ts")).orderBy("ts", "event_id")
@@ -192,7 +186,7 @@ def q_pagerank_weighted_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassociate the division and drift a ulp per round — see
     operators/graph.py).
     """
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     w = Window.partitionBy("event_type", F.to_date("ts")).orderBy("ts", "event_id")
@@ -269,7 +263,7 @@ def q_ssjoin_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes 64% of surviving candidates before the verify join even
     runs (measured at sf0.1: 193k -> 69k pairs).
     """
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     return prefix_jaccard_join(docs, threshold=_SSJOIN_THRESHOLD)
 
 
@@ -468,7 +462,7 @@ def q_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidate volume is exactly w·n regardless of key skew, the
     property hash blocking lacks.
     """
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_name").isNotNull())
     # strict=False HERE only: this lane's oracle replays the bucketed
     # formulation bit-for-bit (same buckets, same stitch), so sparse
     # buckets cannot cause silent lane-vs-oracle divergence — the
@@ -718,7 +712,7 @@ def q_stratified_sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition lands. Compare language_rebalance_weights, which computes
     the rates; this lane EXECUTES a fixed rate table.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     rate = F.coalesce(
         *[
             F.when(F.col("event_type") == s, F.lit(r))
@@ -773,7 +767,7 @@ def q_hll_mergeable_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT merged==direct equality in sparse mode, where the union is
     genuinely lossless).
     """
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     daily = e.groupBy(F.to_date("ts").alias("d")).agg(
         F.hll_sketch_agg("user_id").alias("sk")
     )
@@ -873,7 +867,7 @@ def q_skyline_parts_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dominance semantics never materialize any pairwise join.
     """
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_retailprice").isNotNull() & F.col("p_size").isNotNull())
         .select("p_partkey", "p_retailprice", "p_size")
     )
@@ -934,7 +928,7 @@ def q_triangle_count_handoff_graph(spark: SparkSession, sf_dir: str) -> DataFram
     distributed node ids; the count is one map-side-combining
     aggregate. No iteration, no collect.
     """
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     w = Window.partitionBy("event_type", F.to_date("ts")).orderBy("ts", "event_id")
@@ -1042,7 +1036,7 @@ def q_quota_sample_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     immune by construction: a NULL hash fails the keep-predicate on
     both engines).
     """
-    e = _t(spark, sf_dir, "events").filter(F.col("event_id").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("event_id").isNotNull())
     key = F.md5(F.col("event_id").cast("string").cast("binary"))
     rn = F.row_number().over(
         Window.partitionBy("event_type").orderBy(key, "event_id")
@@ -1116,7 +1110,7 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded groupBy(lang). Total: two shuffles end-to-end, both on
     uniform keys, each stage shrinking the data before the next.
     """
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     quality = docs.filter(X.token_count("text") >= _CURATION_MIN_TOKENS)
     rn = F.row_number().over(
         Window.partitionBy(X.fingerprint_md5("text")).orderBy("doc_id")
@@ -1184,7 +1178,7 @@ def q_cms_mergeable_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compare is a d*w-row full-outer join — constant-size work after
     the one token-frequency shuffle each side shares.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.explode(F.split(F.trim(F.col("text")), X.WS_RE)).alias("tok")
     tf_src = (
         docs.select("source", toks)

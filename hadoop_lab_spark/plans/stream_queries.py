@@ -28,7 +28,6 @@ from hadoop_lab_spark.functions.numeric import (
     sql_exact_round_sum_fast,
 )
 from hadoop_lab_spark.plans.registry import register
-from hadoop_lab_spark.session import tune_session
 from hadoop_lab_spark.streaming.jobs import (
     run_to_memory,
     stream_user_event_counts_stateful,
@@ -42,7 +41,6 @@ _RUN_COUNTER = itertools.count()
 
 
 def _replay(spark: SparkSession, stream: DataFrame, base: str, mode: str) -> DataFrame:
-    tune_session(spark)
     name = f"{base}_{next(_RUN_COUNTER)}"
     run_to_memory(stream, name, mode)
     return spark.table(name)
@@ -71,7 +69,6 @@ def q_stream_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFram
     """Complete-mode emission: the sink's final snapshot is the answer
     (batching-invariant by construction). The same pipeline in update
     mode + delta re-aggregation is exercised by the stateful query."""
-    tune_session(spark)
     stream = stream_windowed_event_counts(spark, sf_dir)
     snap = _replay(spark, stream, "mem_wincounts", "complete")
     # sum_micros arrives as the job's exact integer-micros accumulator;
@@ -194,7 +191,6 @@ def q_stream_static_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     from hadoop_lab_spark.sources import load_table
     from hadoop_lab_spark.streaming.jobs import stream_events
 
-    tune_session(spark)
     customers = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
@@ -281,7 +277,6 @@ def q_stream_foreachbatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hadoop_lab_spark.streaming.jobs import stream_foreachbatch_event_totals
 
-    tune_session(spark)
     sf_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     out = os.path.join(tempfile.gettempdir(), f"hls_feb_{sf_tag}")
     for p in (out, out + "_ckpt"):
@@ -327,7 +322,6 @@ def q_stream_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan between the two."""
     from hadoop_lab_spark.streaming.jobs import _read_stream_table
 
-    tune_session(spark)
     docs = _read_stream_table(spark, sf_dir, "documents").filter(
         F.col("n_chars") > 0
     )

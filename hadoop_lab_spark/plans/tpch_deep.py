@@ -51,13 +51,7 @@ from hadoop_lab_spark.functions.numeric import (
     sql_exact_sum_double_fast,
 )
 from hadoop_lab_spark.plans.registry import register
-from hadoop_lab_spark.session import tune_session
 from hadoop_lab_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _revenue():
@@ -99,23 +93,23 @@ def q_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 25-row nation dim broadcasts; the filtered supplier/customer
     maps are scale-proportional, so the planner chooses their strategy."""
     n1, n2 = "NATION_1", "NATION_2"
-    nation = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(n1, n2))
+    nation = load_table(spark, sf_dir, "nation").filter(F.col("n_name").isin(n1, n2))
     sup_n = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust_n = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").between(
             F.lit("1996-01-01").cast("timestamp"), F.lit("1997-12-31").cast("timestamp")
         )
     ).select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     return (
         li.join(sup_n, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -162,24 +156,24 @@ def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes it into the part-side scan); region/nation dims broadcast.
     The numerator rides the same shuffle as the denominator via a
     conditional sum — one aggregation, no second pass over the join."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
     cust_in_region = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey")
     )
     supp_nation = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
     vol = _revenue()
     return (
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
@@ -241,7 +235,7 @@ def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     and 4-column; this is how the view-referenced-twice Q15 executes in
     most engines."""
     rev = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -251,7 +245,7 @@ def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = rev.agg(F.max("total_revenue").alias("total_revenue"))
     best = rev.join(F.broadcast(mx), "total_revenue")
-    supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return supplier.join(
         best, F.col("s_suppkey") == F.col("l_suppkey")
     ).select("s_suppkey", "s_name", "total_revenue")
@@ -294,7 +288,7 @@ def q_q15_top_supplier_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     rev = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -305,7 +299,7 @@ def q_q15_top_supplier_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = rev.agg(F.max("total_revenue").alias("total_revenue"))
     best = rev.join(F.broadcast(mx), "total_revenue")
-    supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return supplier.join(
         best, F.col("s_suppkey") == F.col("l_suppkey")
     ).select("s_suppkey", "s_name", "total_revenue")
@@ -337,9 +331,9 @@ def q_q17_small_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     integral so avg is bit-identical across engines (exact integer sum,
     one correctly-rounded division) — the strict `<` threshold cannot
     flip on accumulation order."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     part_f = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter((F.col("p_brand") == "Brand#1") & (F.col("p_size") < 15))
         .select("p_partkey")
     )
@@ -388,16 +382,16 @@ def q_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is tiny (heavy-hitter tail), so the orders/customer joins
     hash-join against a pruned probe side."""
     big = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("raw_qty"))
         .filter(F.col("raw_qty") > 250)
         .select("l_orderkey", F.round(F.col("raw_qty"), 2).alias("total_qty"))
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         orders.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(cust, F.col("c_custkey") == F.col("o_custkey"))
@@ -431,10 +425,10 @@ def q_q19_disjunctive_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     brand/size hull both push into their scans BEFORE the join, so at
     100 TB the join probes only band-plausible rows; the exact
     three-band predicate re-applies post-join."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     band = (
         (F.col("p_brand") == "Brand#1")
         & F.col("p_size").between(1, 10)
@@ -495,8 +489,10 @@ def q_q21_lone_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     reused as both the outer side and the NOT-EXISTS probe — at 100 TB
     that is one orderkey shuffle amortized across all three roles, and
     the semi/anti probes are co-partitioned with it."""
-    lines = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderstatus")
+    lines = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate", "o_orderstatus"
+    )
     late = (
         lines.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
@@ -522,7 +518,7 @@ def q_q21_lone_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_anti",
         )
     )
-    supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         waiting.join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
@@ -561,12 +557,12 @@ def q_q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     date-pruned orders slice. The threshold is rounded to 4dp on BOTH
     engines before the strict `>` so a last-ulp accumulation difference
     cannot flip a boundary customer."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
         exact_round_avg_fast("c_acctbal").alias("avg_bal")
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp"))
         .select("o_custkey")
     )
@@ -636,14 +632,14 @@ def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the dim side (EUROPE suppliers) is broadcast-sized at every SF:
     at 100 TB the one big shuffle is the offers groupBy, reused by both
     the min subtree and the join-back probe."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     offers = li.groupBy("l_partkey", "l_suppkey").agg(
         F.min(F.col("l_extendedprice") / F.nullif("l_quantity", F.lit(0))).alias("offer")
     )
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eu = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(nation, F.col("n_nationkey") == F.col("s_nationkey"))
         .join(region, F.col("r_regionkey") == F.col("n_regionkey"))
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
@@ -653,7 +649,7 @@ def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("offer").alias("min_offer")
     )
     parts = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter((F.col("p_size") < 8) & (F.col("p_type") == "ECONOMY"))
         .select("p_partkey")
     )
@@ -710,14 +706,14 @@ def q_q4_priority_checking(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan, and the semi join emits each order at most once — no
     post-join distinct, no row explosion from multi-line orders."""
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(
             (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
         )
         .select("o_orderkey", "o_orderdate", "o_orderpriority")
     )
-    lines = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    lines = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late_exists = orders.join(
         lines,
         (F.col("l_orderkey") == F.col("o_orderkey"))
@@ -788,13 +784,13 @@ def q_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared as whole cents, and the value leaves as cents / 100, one
     correctly rounded division on both engines. The 1-row threshold
     broadcasts onto the per-part rows — bounded by construction."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     supp = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7"),
+            load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7"),
             F.col("n_nationkey") == F.col("s_nationkey"),
         )
         .select("s_suppkey")
@@ -864,9 +860,9 @@ def q_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket. Two shuffles total — custkey join, then the histogram
     groupBy over customer-cardinality rows, second stage collapsing to
     at most max-order-count rows via map-side partial aggregation."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") != "5-LOW")
         .select("o_custkey", "o_orderkey")
     )
@@ -926,12 +922,12 @@ def q_q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     are integral, so qty > 0.5 * total is exact in IEEE double on both
     engines. The nation/region chain stays broadcast-sized at any SF."""
     red_parts = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("red%"))
         .select("p_partkey")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("2000-01-01").cast("timestamp"))
@@ -948,16 +944,16 @@ def q_q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
     )
     asia_nations = (
-        _t(spark, sf_dir, "nation")
+        load_table(spark, sf_dir, "nation")
         .join(
-            _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"),
+            load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"),
             F.col("r_regionkey") == F.col("n_regionkey"),
             "left_semi",
         )
         .select("n_nationkey")
     )
     return (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(dominant, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .join(asia_nations, F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
         .select("s_name", F.round("s_acctbal", 2).alias("s_acctbal"))
@@ -998,17 +994,17 @@ def q_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     differences cannot reorder the cut. One shuffle: the (orderkey,
     date, priority) aggregate; no global sort materializes."""
     cust = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") < F.lit("1998-06-01").cast("timestamp"))
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
     )
     lines = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") > F.lit("1998-06-01").cast("timestamp"))
         .select("l_orderkey", "l_extendedprice", "l_discount")
     )
@@ -1066,17 +1062,17 @@ def q_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer), summed as BIGINT (order-independent), and divided once at
     output — both engines round the bit-identical double."""
     part_f = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%widget%"))
         .select("p_partkey", "p_retailprice")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         "l_quantity", "l_extendedprice", "l_discount",
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     ext100 = F.round(F.col("l_extendedprice") * 100, 0)
     disc100 = F.round(F.col("l_discount") * 100, 0)
     ret100 = F.round(F.col("p_retailprice") * 100, 0)
@@ -1131,11 +1127,11 @@ def q_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the groupBy) with both filters pushed to scans. Top-20 is
     TakeOrderedAndProject on 2dp-rounded revenue with the custkey
     tiebreak (cross-engine-stable ordering)."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(
             (F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
             & (F.col("o_orderdate") < F.lit("1998-07-01").cast("timestamp"))
@@ -1143,11 +1139,11 @@ def q_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_custkey")
     )
     lines = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
         .select("l_orderkey", "l_extendedprice", "l_discount")
     )
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         lines.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("c_custkey") == F.col("o_custkey"))
@@ -1198,11 +1194,11 @@ def q_q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-table lateness inequality rides the orderkey hash join as a
     residual. Output is status-cardinality rows off one fact shuffle
     with map-side partial aggregation."""
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     lines = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1999-01-01").cast("timestamp"))
@@ -1258,7 +1254,7 @@ def q_q16_parts_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFram
     raw rows. Part filters (brand <>, size IN) push to the part scan
     before the fact join."""
     part_f = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(
             (F.col("p_brand") != "Brand#3")
             & (F.col("p_size").isin(1, 4, 9, 16, 25))
@@ -1266,11 +1262,11 @@ def q_q16_parts_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFram
         .select("p_partkey", "p_brand", "p_size")
     )
     blacklist = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(part_f, F.col("l_partkey") == F.col("p_partkey"))
         .join(blacklist, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")

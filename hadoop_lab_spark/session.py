@@ -8,12 +8,14 @@ coalescing, skew-join splitting), Arrow accelerates any pandas exchange,
 and the session timezone is pinned to UTC so timestamp semantics match
 the DuckDB oracle exactly.
 
-Two entry points:
+The confs are applied once, where a session enters the engine (as the
+reference configures its ``Job`` once, at submit); no lane sets one, so
+a caller's own setting holds. Two entry points:
 
 - :func:`get_spark` — build a session (local runs, tests, bench).
 - :func:`tune_session` — apply the runtime-settable subset of the same
-  confs to a session we did *not* create (the verify driver passes its
-  own session into ``__spark_entry__.entry``/``queries()``).
+  confs to a session we did *not* create: the verify driver's (applied
+  by ``__spark_entry__``), or one you built yourself.
 
 :func:`scoped_conf` changes one conf for the length of a block and
 restores it.
@@ -117,8 +119,8 @@ def _merged_excluded_rules(spark: SparkSession, ours: str) -> str:
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine confs to an existing session.
 
-    Used when the session is owned by someone else (the verify driver).
-    Only touches confs that Spark allows changing at runtime; additive
+    Used once, when a session the engine did not build enters it. Only
+    touches confs that Spark allows changing at runtime; additive
     confs (rule exclusions) merge with the owner's value rather than
     replace it.
     """

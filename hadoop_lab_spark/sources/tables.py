@@ -182,10 +182,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table as a DataFrame."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     path = table_path(sf_dir, name)
     return _normalize(spark.read.schema(parquet_schema(spark, path)).parquet(path))
 

@@ -25,10 +25,13 @@ from __future__ import annotations
 import pytest
 
 from hadoop_lab_spark.plans.registry import REGISTRY, load_all_query_modules
+from hadoop_lab_spark.session import scoped_conf
 
 from tests.conftest import SF_DIR
 
 load_all_query_modules()
+
+_AQE = "spark.sql.adaptive.enabled"
 
 _AQE_SENSITIVE_TAGS = {
     "join",
@@ -60,28 +63,14 @@ def _rows(df):
 
 @pytest.mark.parametrize("name", CANDIDATES)
 def test_identical_with_and_without_aqe(spark, name):
-    # Every lane calls tune_session(), which re-asserts the adaptive
-    # confs from session._RUNTIME_CONF on the shared session — a plain
-    # spark.conf.set("...adaptive.enabled", "false") here would be
-    # silently overridden inside the lane and the OFF leg would test
-    # nothing. Strip the adaptive keys from the live dict for the OFF
-    # leg so tune_session leaves the switch alone.
-    from hadoop_lab_spark import session as S
-
+    # Lanes set no conf, so the OFF leg is a plain scoped set; the
+    # assertion inside the leg fails the gate if a lane ever resets it.
     spec = REGISTRY[name]
-    saved = dict(S._RUNTIME_CONF)
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        a = _rows(spec.fn(spark, SF_DIR))
-        for key in [k for k in S._RUNTIME_CONF if "adaptive" in k]:
-            del S._RUNTIME_CONF[key]
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    assert spark.conf.get(_AQE) == "true"
+    a = _rows(spec.fn(spark, SF_DIR))
+    with scoped_conf(spark, _AQE, "false"):
         b = _rows(spec.fn(spark, SF_DIR))
         assert (
-            spark.conf.get("spark.sql.adaptive.enabled") == "false"
+            spark.conf.get(_AQE) == "false"
         ), "OFF leg was overridden — the gate would be vacuous"
-    finally:
-        S._RUNTIME_CONF.clear()
-        S._RUNTIME_CONF.update(saved)
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
     assert a == b, f"{name}: results differ between AQE on and off"

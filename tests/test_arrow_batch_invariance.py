@@ -26,6 +26,7 @@ from __future__ import annotations
 import pytest
 
 from hadoop_lab_spark.plans.registry import REGISTRY, load_all_query_modules
+from hadoop_lab_spark.session import scoped_conf
 
 from tests.conftest import SF_DIR
 
@@ -53,16 +54,10 @@ def _rows(df):
 @pytest.mark.parametrize("name", CANDIDATES)
 def test_identical_across_arrow_batch_sizes(spark, name):
     spec = REGISTRY[name]
-    default = spark.conf.get(_CONF)
-    try:
-        a = _rows(spec.fn(spark, SF_DIR))
-        spark.conf.set(_CONF, "7")  # many tiny batches
-        # tune_session must not have clobbered the toggle (the lane
-        # re-asserts session._RUNTIME_CONF — the r6 vacuous-toggle
-        # lesson); assert INSIDE the leg.
-        b_df = spec.fn(spark, SF_DIR)
+    a = _rows(spec.fn(spark, SF_DIR))
+    with scoped_conf(spark, _CONF, "7"):  # many tiny batches
+        b = _rows(spec.fn(spark, SF_DIR))
+        # No lane sets a conf; assert INSIDE the leg that none reset
+        # this one (the r6 vacuous-toggle lesson).
         assert spark.conf.get(_CONF) == "7"
-        b = _rows(b_df)
-    finally:
-        spark.conf.set(_CONF, default)
     assert a == b, f"{name}: results depend on Arrow batch boundaries"

@@ -12,13 +12,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from hadoop_lab_spark.session import scoped_conf
 from hadoop_lab_spark.sources.bucketing import read_table, write_bucketed
 
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark, tmp_path_factory):
     warehouse = str(tmp_path_factory.mktemp("warehouse"))
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     orders = spark.range(0, 10_000).select(
         F.col("id").alias("o_orderkey"),
         (F.col("id") % 700).alias("o_custkey"),
@@ -45,8 +45,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     o = read_table(spark, t_orders)
     l = read_table(spark, t_lines)
     # Disable auto-broadcast so the join would otherwise shuffle both sides.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
         joined = o.join(l, o.o_orderkey == l.l_orderkey).groupBy("o_custkey").agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -58,10 +57,6 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         # scan sides must read buckets directly
         assert "Exchange" not in join_part, join_part[:2000]
         assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
 
 
 def test_bucketed_join_matches_shuffled_join(spark, bucketed_tables):
@@ -74,14 +69,11 @@ def test_bucketed_join_matches_shuffled_join(spark, bucketed_tables):
         .select("o_orderkey", "l_linenumber")
         .collect()
     }
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "false")
-    try:
+    with scoped_conf(spark, "spark.sql.sources.bucketing.enabled", "false"):
         plain = {
             (r["o_orderkey"], r["l_linenumber"])
             for r in o.join(l, o.o_orderkey == l.l_orderkey)
             .select("o_orderkey", "l_linenumber")
             .collect()
         }
-    finally:
-        spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     assert bucketed == plain

@@ -24,6 +24,7 @@ from __future__ import annotations
 import pytest
 
 from hadoop_lab_spark.plans.registry import REGISTRY, load_all_query_modules
+from hadoop_lab_spark.session import scoped_conf
 
 from tests.conftest import SF_DIR
 
@@ -66,13 +67,11 @@ def _rows(df):
 @pytest.mark.parametrize("name", CANDIDATES)
 def test_identical_interpreted_vs_codegen(spark, name):
     spec = REGISTRY[name]
-    try:
-        spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    with scoped_conf(spark, "spark.sql.codegen.wholeStage", "true"):
         a = _rows(spec.fn(spark, SF_DIR))
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    with (
+        scoped_conf(spark, "spark.sql.codegen.wholeStage", "false"),
+        scoped_conf(spark, "spark.sql.codegen.factoryMode", "NO_CODEGEN"),
+    ):
         b = _rows(spec.fn(spark, SF_DIR))
-    finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", "true")
-        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     assert a == b, f"{name}: results differ between codegen and interpreted"

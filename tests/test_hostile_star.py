@@ -34,6 +34,7 @@ import pytest
 import duckdb
 
 from hadoop_lab_spark.plans.registry import REGISTRY, load_all_query_modules
+from hadoop_lab_spark.session import scoped_conf
 from hadoop_lab_spark.testing import assert_matches_oracle
 
 load_all_query_modules()
@@ -319,28 +320,25 @@ def test_lane_survives_hostile_star(spark, hostile_star_dir, name):
 
 
 @pytest.mark.parametrize(
-    "confs",
+    "key, value",
     [
-        {"spark.sql.autoBroadcastJoinThreshold": "-1"},
-        {"spark.sql.adaptive.enabled": "false"},
-        {"spark.sql.adaptive.coalescePartitions.enabled": "false"},
+        ("spark.sql.autoBroadcastJoinThreshold", "-1"),
+        ("spark.sql.adaptive.enabled", "false"),
+        ("spark.sql.adaptive.coalescePartitions.enabled", "false"),
     ],
     ids=["no_broadcast", "aqe_off", "no_coalesce"],
 )
-def test_q2_zero_quantity_under_plan_freedoms(spark, hostile_star_dir, confs):
+def test_q2_zero_quantity_under_plan_freedoms(spark, hostile_star_dir, key, value):
     """The fixture's ``l_quantity = 0.0`` row reaches q2's unit-price
     division under every one of these plans (under the default plan it
     may be pruned first); under ANSI a plain division raised there."""
     spec = REGISTRY["q2_min_cost_supplier"]
-    saved = {k: spark.conf.get(k) for k in confs}
     con = _con_for(hostile_star_dir)
     try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        df = spec.fn(spark, hostile_star_dir)
-        df.count()
-        assert_matches_oracle(df, con, spec.oracle, name="hostile-star:q2")
+        with scoped_conf(spark, key, value):
+            df = spec.fn(spark, hostile_star_dir)
+            df.count()
+            assert_matches_oracle(df, con, spec.oracle, name="hostile-star:q2")
+            assert spark.conf.get(key) == value, "leg overridden — vacuous gate"
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
         con.close()

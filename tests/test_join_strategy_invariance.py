@@ -14,9 +14,8 @@ covers the hint-free joins Catalyst auto-selects — which is exactly
 where a threshold change on a production cluster silently re-plans.
 
 Scope: join-tagged lanes (plus asof/semi/anti/outer via their tags'
-overlap with "join"). The broadcast threshold is runtime-settable but
-re-asserted by tune_session inside every lane, so the OFF leg strips
-it from session._RUNTIME_CONF exactly like the AQE gate does.
+overlap with "join"). Lanes set no conf, so the OFF leg sets the
+runtime-settable threshold for its own length with ``scoped_conf``.
 """
 
 from __future__ import annotations
@@ -24,6 +23,7 @@ from __future__ import annotations
 import pytest
 
 from hadoop_lab_spark.plans.registry import REGISTRY, load_all_query_modules
+from hadoop_lab_spark.session import _RUNTIME_CONF, scoped_conf
 
 from tests.conftest import SF_DIR
 
@@ -48,19 +48,10 @@ def _rows(df):
 
 @pytest.mark.parametrize("name", CANDIDATES)
 def test_identical_without_auto_broadcast(spark, name):
-    from hadoop_lab_spark import session as S
-
     spec = REGISTRY[name]
-    saved = dict(S._RUNTIME_CONF)
-    try:
-        spark.conf.set(_KEY, S._RUNTIME_CONF[_KEY])
-        a = _rows(spec.fn(spark, SF_DIR))
-        del S._RUNTIME_CONF[_KEY]
-        spark.conf.set(_KEY, "-1")
+    assert spark.conf.get(_KEY) == _RUNTIME_CONF[_KEY]
+    a = _rows(spec.fn(spark, SF_DIR))
+    with scoped_conf(spark, _KEY, "-1"):
         b = _rows(spec.fn(spark, SF_DIR))
         assert spark.conf.get(_KEY) == "-1", "OFF leg overridden — vacuous gate"
-    finally:
-        S._RUNTIME_CONF.clear()
-        S._RUNTIME_CONF.update(saved)
-        spark.conf.set(_KEY, S._RUNTIME_CONF[_KEY])
     assert a == b, f"{name}: results differ when auto-broadcast is disabled"

@@ -235,7 +235,7 @@ def test_lint_catches_an_unguarded_scratch_lane():
     lane, in both the direct and the name-hoisted form."""
     direct = (
         "def q_scratch(spark, sf_dir):\n"
-        "    e = _t(spark, sf_dir, 'events')\n"
+        "    e = load_table(spark, sf_dir, 'events')\n"
         "    return e.agg(exact_round_sum_fast('value').alias('s'))\n"
     )
     hoisted = (

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import pytest
 
+from hadoop_lab_spark.session import scoped_conf
 from hadoop_lab_spark.sources import load_table
 from hadoop_lab_spark.sources.tables import TABLES
 
@@ -33,11 +34,8 @@ def _rows(df):
 
 @pytest.mark.parametrize("name", sorted(TABLES))
 def test_table_decodes_identically(spark, name):
-    try:
-        spark.conf.set(_KEY, "true")
+    with scoped_conf(spark, _KEY, "true"):
         a = _rows(load_table(spark, SF_DIR, name))
-        spark.conf.set(_KEY, "false")
+    with scoped_conf(spark, _KEY, "false"):
         b = _rows(load_table(spark, SF_DIR, name))
-    finally:
-        spark.conf.set(_KEY, "true")
     assert a == b, f"{name}: vectorized and row-by-row readers decode differently"

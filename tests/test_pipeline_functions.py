@@ -73,25 +73,6 @@ def test_quality_score_bounds(spark, docs):
     assert all(0.0 <= v <= 1.0 for v in vals)
 
 
-def test_minhash_candidates_subset_of_shingle_pairs(spark, docs):
-    """LSH candidates must be a subset of pairs sharing ≥1 shingle
-    (banding can only lose candidates, never invent them)."""
-    sh = D.word_shingles(docs, "doc_id", "text")
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    all_pairs = {
-        (r["id_a"], r["id_b"])
-        for r in a.join(b, "shingle").filter(F.col("id_a") < F.col("id_b")).distinct().collect()
-    }
-    cands = {
-        (r["id_a"], r["id_b"])
-        for r in D.lsh_candidate_pairs(docs, "doc_id", "text").collect()
-    }
-    assert cands <= all_pairs
-    # near-identical docs 1/3 share most shingles → must collide on a band
-    assert (1, 3) in cands
-
-
 def test_minhash_ingest_pairs_equals_two_helper_union(spark):
     """The composed ingest pair stage must return EXACTLY the union of
     its two predecessors — minhash_incremental_dups(base, delta) plus
@@ -363,16 +344,13 @@ def test_ingest_merge_frees_pair_stage_blocks(spark):
     )
 
 
-@pytest.mark.parametrize("pairs", ["lsh_candidate_pairs", "minhash_near_dups"])
+@pytest.mark.parametrize("pairs", ["minhash_near_dups"])
 def test_band_self_join_is_merged_not_broadcast(spark, docs, pairs):
     """The (band, band_sig) self-join stays a sort-merge join even where
     both sides are small enough to broadcast: a broadcast on that
     string key pins a 64 MB hash-relation page on the driver until the
     ContextCleaner frees it."""
-    if pairs == "lsh_candidate_pairs":
-        df = D.lsh_candidate_pairs(docs, "doc_id", "text")
-    else:
-        df = D.minhash_near_dups(docs, "doc_id", "text", 0.5)
+    df = getattr(D, pairs)(docs, "doc_id", "text", 0.5)
     assert (1, 3) in {(r["id_a"], r["id_b"]) for r in df.collect()}
     plan = df._jdf.queryExecution().executedPlan().toString()
     band_joins = [ln for ln in plan.splitlines() if "Join" in ln and "band_sig" in ln]

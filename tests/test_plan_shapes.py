@@ -8,11 +8,13 @@ schemas), not full plan strings — robust to cosmetic plan changes.
 
 from __future__ import annotations
 
+import contextlib
 import re
 
 import pytest
 
 from hadoop_lab_spark.plans.registry import REGISTRY, load_all_query_modules
+from hadoop_lab_spark.session import scoped_conf
 
 from tests.conftest import SF_DIR
 
@@ -644,14 +646,9 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    old = {}
-    for k, v in conf.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+    with contextlib.ExitStack() as stack:
+        for k, v in conf.items():
+            stack.enter_context(scoped_conf(spark, k, v))
         o = (
             spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
             .filter(F.col("o_orderpriority") == "1-URGENT")
@@ -671,9 +668,3 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
             "might_contain" in line and "l_orderkey" in line
             for line in plan.splitlines()
         ), plan[:1500]
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -2,8 +2,9 @@
 """Simulate the external verify driver (the repo's correctness gate).
 
 Runs every ``queries()[name]`` from ``__spark_entry__`` on a VANILLA
-SparkSession (the driver owns the session — engine confs must be
-applied inside the queries via ``tune_session``) and compares each
+SparkSession (the driver owns the session; each ``queries()`` callable
+applies the engine confs to it with ``tune_session`` before building,
+the lanes themselves set none) and compares each
 against ``oracle_sql()[name]`` executed in DuckDB over the same parquet
 tables: sorted column names, row count, and an order-insensitive
 sha256 of repr'd rows — the exact driver method. Expect
